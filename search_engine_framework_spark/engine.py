@@ -8,16 +8,41 @@ Catalyst's distributed ``TakeOrderedAndProject``.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 
 from .functions.analyzer import AnalyzerConfig
 from .index.build import IndexPaths
 from .index.reader import IndexReader
 from .plans import ast
 from .plans.compiler import QueryCompiler
-from .plans.models import RetrievalModel, UnrankedBoolean
+from .plans.models import BM25, RetrievalModel, UnrankedBoolean
 from .plans.parser import parse_query
+
+# Result schemas. Ranked frames carry ``rank`` 1..n in result order.
+_RANKED = "doc_id long, ext_id string, rank int, score double"
+_RANKED_PER_QID = "qid string, doc_id long, ext_id string, rank int, score double"
+_COLLAPSED = "conv_id string, doc_id long, ext_id string, rank int, score double"
+_CONVERSATIONS = "conv_id string, rank int, score double, n_turns long"
+_SCORED = "doc_id long, ext_id string, score double"
+_CONV_SCORED = "conv_id string, score double, n_turns long"
+
+
+def _reference_order(model: RetrievalModel | None = None) -> list:
+    """The reference's result order (QryEval.java:353-474): desc score,
+    asc external id; external id alone under UnrankedBoolean, where every
+    match scores 1.0."""
+    if isinstance(model, UnrankedBoolean):
+        return [F.asc("ext_id")]
+    return [F.desc("score"), F.asc("ext_id")]
+
+
+def _top_k_rows(frame: DataFrame, k: int, order: list | None = None) -> list:
+    """order → limit → collect: Catalyst plans the cut as a distributed
+    ``TakeOrderedAndProject``; the default order is the reference's."""
+    return frame.orderBy(*(order or _reference_order())).limit(k).collect()
 
 
 class UnknownFieldError(ValueError):
@@ -125,9 +150,7 @@ class SearchEngine:
         path (it never touches the docmap's metadata columns)."""
         node = self._parse(query, model, synonyms)
         if node is None:
-            return self.spark.createDataFrame(
-                [], "doc_id long, ext_id string, rank int, score double"
-            )
+            return self._ranked([])
         # Driver-side fast path (fastpath.py): flat #SUM BM25 over a
         # driver-readable index whose matched postings fit the budget is
         # answered with pyarrow + the numpy codec — no Spark job at all,
@@ -136,13 +159,11 @@ class SearchEngine:
         # caller tunes block pruning (they are exercising the distributed
         # path) and for every query above the gates — head-term queries
         # on a 10^12-turn corpus always run the distributed plan.
-        from .plans.models import BM25 as _BM25
-
         if (
             doc_filter is None
             and boost is None
             and prune_min_blocks is None
-            and isinstance(model, _BM25)
+            and isinstance(model, BM25)
             # MultiReader federates several physical indexes — the
             # driver fast path reads ONE index's files, so it opts out
             and getattr(self.reader, "fastpath_supported", True)
@@ -153,65 +174,21 @@ class SearchEngine:
 
                 hit = bm25_topk_driver(self.reader, flat, model, k)
                 if hit is not None:
-                    return self.spark.createDataFrame(
-                        [
-                            (d, e, i + 1, s)
-                            for i, (d, e, s) in enumerate(hit)
-                        ],
-                        "doc_id long, ext_id string, rank int, score double",
+                    return self._ranked(
+                        {"doc_id": d, "ext_id": e, "score": s}
+                        for d, e, s in hit
                     )
-        compiler = QueryCompiler(self.reader, model)
         # topk enables block-max decode pruning on the BM25 #SUM fast path
         # (exact top-k; no-op for other models/trees — compiler.prepare).
         # A doc_filter disables it: pruning keeps only the CORPUS-WIDE
         # top-k, but the filtered top-k can contain docs ranked below
         # that globally — the filter needs the full scored list.
-        compiler.prepare(
-            node,
-            topk=None if (doc_filter is not None or boost is not None) else k,
-            prune_min_blocks=prune_min_blocks,
-        )
-        try:
-            scored = compiler.compile_query(node)
-            # No broadcast hint: the docmap is corpus-sized (10^12 rows
-            # at target scale) — AQE broadcasts it when it is actually
-            # small and sort-merge-joins otherwise; a forced broadcast
-            # would OOM the driver on a real corpus.
-            docmap = self.reader.docmap()
-            if doc_filter is not None:
-                docmap = docmap.where(F.expr(doc_filter))
-            if boost is not None:
-                # NULL boost values (e.g. a NULL metadata column) leave
-                # the row unboosted (factor 1) — the Elasticsearch
-                # `missing` default — rather than producing NULL scores
-                # that crash the rank fold.
-                bexpr = F.coalesce(F.expr(boost).cast("double"), F.lit(1.0))
-                withext = (
-                    scored.withColumnRenamed("score", "_raw")
-                    .join(docmap, "doc_id")
-                    .select(
-                        "doc_id",
-                        "ext_id",
-                        (F.col("_raw") * bexpr).alias("score"),
-                    )
-                )
-            else:
-                docmap = docmap.select("doc_id", "ext_id")
-                withext = scored.join(docmap, "doc_id")
-            if isinstance(model, UnrankedBoolean):
-                ordered = withext.orderBy(F.asc("ext_id"))
-            else:
-                ordered = withext.orderBy(F.desc("score"), F.asc("ext_id"))
-            rows = ordered.limit(k).collect()
-        finally:
-            compiler.release()
-        out = [
-            (r["doc_id"], r["ext_id"], i + 1, float(r["score"]))
-            for i, r in enumerate(rows)
-        ]
-        return self.spark.createDataFrame(
-            out, "doc_id long, ext_id string, rank int, score double"
-        )
+        topk = None if (doc_filter is not None or boost is not None) else k
+        with self._compiled(node, model, topk, prune_min_blocks) as (scored, _):
+            withext = self._join_docmap(scored, doc_filter, boost)
+            return self._ranked(
+                _top_k_rows(withext, k, _reference_order(model))
+            )
 
     def search_many(
         self,
@@ -240,8 +217,6 @@ class SearchEngine:
         All-stopword/empty queries contribute no rows (the trec sink's
         dummy-row rule handles absent qids, sinks/trec.py).
         """
-        from pyspark.sql import Window
-
         nodes: dict[str, ast.Node] = {}
         for qid, text in queries.items():
             node = self._parse(text, model)
@@ -249,9 +224,7 @@ class SearchEngine:
                 continue
             nodes[qid] = node
         if not nodes:
-            return self.spark.createDataFrame(
-                [], "qid string, doc_id long, ext_id string, rank int, score double"
-            )
+            return self.spark.createDataFrame([], _RANKED_PER_QID)
 
         all_pairs = set()
         need_pos = False
@@ -281,28 +254,11 @@ class SearchEngine:
             union = frames[0]
             for f in frames[1:]:
                 union = union.unionByName(f)
-            docmap = self.reader.docmap().select("doc_id", "ext_id")
-            withext = union.join(docmap, "doc_id")
-            if isinstance(model, UnrankedBoolean):
-                w = Window.partitionBy("qid").orderBy(F.asc("ext_id"))
-            else:
-                w = Window.partitionBy("qid").orderBy(
-                    F.desc("score"), F.asc("ext_id")
-                )
-            rows = (
-                withext.withColumn("rank", F.row_number().over(w))
-                .where(F.col("rank") <= k)
-                .collect()
+            return self._ranked_per_qid(
+                self._join_docmap(union), k, _reference_order(model)
             )
         finally:
             shared.unpersist()
-        out = [
-            (r["qid"], r["doc_id"], r["ext_id"], int(r["rank"]), float(r["score"]))
-            for r in sorted(rows, key=lambda r: (r["qid"], r["rank"]))
-        ]
-        return self.spark.createDataFrame(
-            out, "qid string, doc_id long, ext_id string, rank int, score double"
-        )
 
     def search_bulk_bm25(
         self,
@@ -330,11 +286,8 @@ class SearchEngine:
         per-query #SUM plan uses, so scores match bit-for-bit, not just to
         rounding. Queries must be plain term bags (no # operators, no
         field suffixes — use search_many for structured queries)."""
-        from pyspark.sql import Window
-
         from .functions.analyzer import analyze_terms
         from .functions.scoring import bm25_tf_weight, model_idf
-        from .plans.models import BM25
 
         model = model or BM25()
         if not isinstance(model, BM25):
@@ -369,9 +322,7 @@ class SearchEngine:
             for qid, text in queries.items()
         }
         pairs = {(t, field) for ts in terms_by_qid.values() for t in ts}
-        empty = self.spark.createDataFrame(
-            [], "qid string, doc_id long, ext_id string, rank int, score double"
-        )
+        empty = self.spark.createDataFrame([], _RANKED_PER_QID)
         if not pairs:
             return empty
 
@@ -411,21 +362,11 @@ class SearchEngine:
             expr = expr + F.coalesce(
                 F.col("m")[F.lit(j)] * F.lit(user_w), F.lit(0.0)
             )
-        docmap = self.reader.docmap().select("doc_id", "ext_id")
-        w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("ext_id"))
-        rows = (
-            grouped.select("qid", "doc_id", expr.alias("score"))
-            .join(docmap, "doc_id")
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .collect()
-        )
-        out = [
-            (r["qid"], r["doc_id"], r["ext_id"], int(r["rank"]), float(r["score"]))
-            for r in sorted(rows, key=lambda r: (r["qid"], r["rank"]))
-        ]
-        return self.spark.createDataFrame(
-            out, "qid string, doc_id long, ext_id string, rank int, score double"
+        return self._ranked_per_qid(
+            self._join_docmap(
+                grouped.select("qid", "doc_id", expr.alias("score"))
+            ),
+            k,
         )
 
     def explain_query(self, query: str, model, k: int = 100) -> dict:
@@ -450,25 +391,17 @@ class SearchEngine:
             buckets = sorted(
                 {term_bucket(t, f, self.reader._n_buckets) for t, f in pairs}
             )
-        from .plans.models import BM25 as _BM25
-
         fastpath = (
-            isinstance(model, _BM25)
+            isinstance(model, BM25)
             and QueryCompiler._flat_sum_pairs(node) is not None
         )
-        compiler = QueryCompiler(self.reader, model)
         # topk=None: with a topk the BM25 block-max seed pass would run a
         # real Spark job (fetch + collect of seed partials) — explain must
         # stay action-free. The pruned path's actual decode counters are
         # decode_metrics()'s job. prepare()'s dictionary seek is the ONE
-        # stats lookup; its _stats cache feeds the pairs report below.
-        compiler.prepare(node, topk=None)
-        try:
-            stats = compiler._stats
-            scored = compiler.compile_query(node)
+        # stats lookup; its stats feed the pairs report below.
+        with self._compiled(node, model) as (scored, stats):
             plan = scored._jdf.queryExecution().executedPlan().toString()
-        finally:
-            compiler.release()
         est_postings = sum(
             int(stats.get((t, f), {}).get("df", 0)) for t, f in pairs
         )
@@ -503,9 +436,8 @@ class SearchEngine:
         boolean / Indri trees have no per-term additive decomposition
         to report honestly)."""
         from .functions.scoring import model_idf
-        from .plans.models import BM25 as _BM25
 
-        if not isinstance(model, _BM25):
+        if not isinstance(model, BM25):
             raise ValueError("explain_doc supports the BM25 model only")
         node = self._parse(query, model)
         flat = QueryCompiler._flat_sum_weighted(node) if node else None
@@ -592,9 +524,8 @@ class SearchEngine:
         hit set are both tiny). Raises for non-flat queries, mirroring
         explain_doc."""
         from .functions.scoring import model_idf
-        from .plans.models import BM25 as _BM25
 
-        if not isinstance(model, _BM25):
+        if not isinstance(model, BM25):
             raise ValueError("explain_topk supports BM25-family models only")
         node = self._parse(query, model)
         flat = (
@@ -711,6 +642,88 @@ class SearchEngine:
                 f"build_index(fields=...) or fix the query"
             )
 
+    @contextmanager
+    def _compiled(
+        self,
+        node: ast.Node,
+        model: RetrievalModel,
+        topk: int | None = None,
+        prune_min_blocks: int | None = None,
+    ):
+        """Compile scope → (scored (doc_id, score) frame, per-(term, field)
+        stats). ``prepare`` persists the query's decoded postings and the
+        scope releases them on exit, so actions run inside it read the
+        cache, while a lazy frame returned from it runs uncached and
+        leaves no persisted postings behind."""
+        compiler = QueryCompiler(self.reader, model)
+        try:
+            compiler.prepare(
+                node, topk=topk, prune_min_blocks=prune_min_blocks
+            )
+            yield compiler.compile_query(node), compiler._stats
+        finally:
+            compiler.release()
+
+    def _join_docmap(
+        self,
+        scored: DataFrame,
+        doc_filter: str | None = None,
+        boost: str | None = None,
+    ) -> DataFrame:
+        """scored ⋈ docmap on doc_id, adding ``ext_id``; ``doc_filter``
+        drops docs by their metadata and ``boost`` multiplies their score
+        (see :meth:`search`)."""
+        # No broadcast hint: the docmap is corpus-sized (10^12 rows at
+        # target scale) — AQE broadcasts it when it is actually small and
+        # sort-merge-joins otherwise; a forced broadcast would OOM the
+        # driver on a real corpus.
+        docmap = self.reader.docmap()
+        if doc_filter is not None:
+            docmap = docmap.where(F.expr(doc_filter))
+        if boost is None:
+            return scored.join(docmap.select("doc_id", "ext_id"), "doc_id")
+        # NULL boost values (e.g. a NULL metadata column) leave the row
+        # unboosted (factor 1) — the Elasticsearch `missing` default —
+        # rather than producing NULL scores that crash the rank fold.
+        bexpr = F.coalesce(F.expr(boost).cast("double"), F.lit(1.0))
+        return (
+            scored.withColumnRenamed("score", "_raw")
+            .join(docmap, "doc_id")
+            .select("doc_id", "ext_id", (F.col("_raw") * bexpr).alias("score"))
+        )
+
+    def _ranked(self, rows, schema: str = _RANKED) -> DataFrame:
+        """Materialize ``rows`` (already in result order) as ``schema``:
+        ``rank`` is the 1-based position, every other column is read from
+        the row by name, ``score`` as a Python float."""
+        cols = [c.split()[0] for c in schema.split(",")]
+        out = [
+            tuple(
+                i if c == "rank" else float(r[c]) if c == "score" else r[c]
+                for c in cols
+            )
+            for i, r in enumerate(rows, 1)
+        ]
+        return self.spark.createDataFrame(out, schema)
+
+    def _ranked_per_qid(
+        self, frame: DataFrame, k: int, order: list | None = None
+    ) -> DataFrame:
+        """Per-qid top-k of (qid, doc_id, ext_id, score): one
+        ``row_number`` window over ``order`` (default: the reference's)
+        per qid, cut at ``k``, materialized in (qid, rank) order."""
+        w = Window.partitionBy("qid").orderBy(*(order or _reference_order()))
+        rows = (
+            frame.withColumn("rank", F.row_number().over(w))
+            .where(F.col("rank") <= k)
+            .collect()
+        )
+        out = [
+            (r["qid"], r["doc_id"], r["ext_id"], int(r["rank"]), float(r["score"]))
+            for r in sorted(rows, key=lambda r: (r["qid"], r["rank"]))
+        ]
+        return self.spark.createDataFrame(out, _RANKED_PER_QID)
+
     def vsm_search(self, query: str, k: int = 100, field: str = "body") -> DataFrame:
         """lnc.ltc vector-space retrieval (the reference's f18 scorer as a
         standalone model): → DataFrame(doc_id, ext_id, rank, score)."""
@@ -719,20 +732,7 @@ class SearchEngine:
 
         terms = analyze_terms(query, self.analyzer)
         scored = vsm_scores(self.reader, terms, field=field)
-        docmap = self.reader.docmap().select("doc_id", "ext_id")
-        rows = (
-            scored.join(docmap, "doc_id")
-            .orderBy(F.desc("score"), F.asc("ext_id"))
-            .limit(k)
-            .collect()
-        )
-        out = [
-            (r["doc_id"], r["ext_id"], i + 1, float(r["score"]))
-            for i, r in enumerate(rows)
-        ]
-        return self.spark.createDataFrame(
-            out, "doc_id long, ext_id string, rank int, score double"
-        )
+        return self._ranked(_top_k_rows(self._join_docmap(scored), k))
 
     def vsm_search_rocchio(
         self,
@@ -758,17 +758,14 @@ class SearchEngine:
         from .vsm import rocchio_expand, vsm_scores, vsm_scores_weighted
 
         terms = analyze_terms(query, self.analyzer)
-        empty_schema = "doc_id long, ext_id string, rank int, score double"
+        # one docmap read shared by both cuts (each read lists its files)
         docmap = self.reader.docmap().select("doc_id", "ext_id")
-        fb_rows = (
-            vsm_scores(self.reader, terms, field=field)
-            .join(docmap, "doc_id")
-            .orderBy(F.desc("score"), F.asc("ext_id"))
-            .limit(int(fb_k))
-            .collect()
+        fb_rows = _top_k_rows(
+            vsm_scores(self.reader, terms, field=field).join(docmap, "doc_id"),
+            int(fb_k),
         )
         if not fb_rows:
-            return self.spark.createDataFrame([], empty_schema)
+            return self._ranked([])
         expanded = rocchio_expand(
             self.reader,
             terms,
@@ -778,18 +775,8 @@ class SearchEngine:
             beta=beta,
             field=field,
         )
-        rows = (
-            vsm_scores_weighted(self.reader, dict(expanded), field=field)
-            .join(docmap, "doc_id")
-            .orderBy(F.desc("score"), F.asc("ext_id"))
-            .limit(int(k))
-            .collect()
-        )
-        out = [
-            (r["doc_id"], r["ext_id"], i + 1, float(r["score"]))
-            for i, r in enumerate(rows)
-        ]
-        return self.spark.createDataFrame(out, empty_schema)
+        scored = vsm_scores_weighted(self.reader, dict(expanded), field=field)
+        return self._ranked(_top_k_rows(scored.join(docmap, "doc_id"), int(k)))
 
     def search_df(
         self,
@@ -816,28 +803,11 @@ class SearchEngine:
         raw-score order)."""
         node = self._parse(query, model, synonyms)
         if node is None:
-            return self.spark.createDataFrame([], "doc_id long, ext_id string, score double")
-        compiler = QueryCompiler(self.reader, model)
-        compiler.prepare(node)
-        scored = compiler.compile_query(node)
-        docmap = self.reader.docmap()
-        if doc_filter is not None:
-            docmap = docmap.where(F.expr(doc_filter))
-        if boost is None:
-            return scored.join(
-                docmap.select("doc_id", "ext_id"), "doc_id"
-            ).select("doc_id", "ext_id", "score")
-        # NULL boost values boost by 1 (see search()): never NULL scores.
-        bexpr = F.coalesce(F.expr(boost).cast("double"), F.lit(1.0))
-        return (
-            scored.withColumnRenamed("score", "_raw")
-            .join(docmap, "doc_id")
-            .select(
-                "doc_id",
-                "ext_id",
-                (F.col("_raw") * bexpr).alias("score"),
+            return self.spark.createDataFrame([], _SCORED)
+        with self._compiled(node, model) as (scored, _):
+            return self._join_docmap(scored, doc_filter, boost).select(
+                "doc_id", "ext_id", "score"
             )
-        )
 
     # -- BM25F (field-weighted BM25; bm25f.py) ---------------------------------
     def search_bm25f(
@@ -873,22 +843,9 @@ class SearchEngine:
         per_dt = per_dt.persist()
         try:
             scored = _scores_from_tilde(self.reader, per_dt, k1=k1)
-            docmap = self.reader.docmap().select("doc_id", "ext_id")
-            rows = (
-                scored.join(docmap, "doc_id")
-                .orderBy(F.desc("score"), F.asc("ext_id"))
-                .limit(k)
-                .collect()
-            )
+            return self._ranked(_top_k_rows(self._join_docmap(scored), k))
         finally:
             per_dt.unpersist()
-        out = [
-            (r["doc_id"], r["ext_id"], i + 1, float(r["score"]))
-            for i, r in enumerate(rows)
-        ]
-        return self.spark.createDataFrame(
-            out, "doc_id long, ext_id string, rank int, score double"
-        )
 
     def bm25f_scores_df(
         self,
@@ -904,8 +861,7 @@ class SearchEngine:
 
         terms = list(dict.fromkeys(analyze_terms(query, self.analyzer)))
         scored = bm25f_scores(self.reader, terms, weights, k1=k1, b=b)
-        docmap = self.reader.docmap().select("doc_id", "ext_id")
-        return scored.join(docmap, "doc_id").select("doc_id", "ext_id", "score")
+        return self._join_docmap(scored).select("doc_id", "ext_id", "score")
 
     _CACHE_MAX = 256
 
@@ -952,9 +908,7 @@ class SearchEngine:
             cache[key] = rows
             while len(cache) > self._CACHE_MAX:
                 cache.popitem(last=False)
-        return self.spark.createDataFrame(
-            rows, "doc_id long, ext_id string, rank int, score double"
-        )
+        return self.spark.createDataFrame(rows, _RANKED)
 
     def dismax_scores_df(
         self,
@@ -980,16 +934,11 @@ class SearchEngine:
                 )
         terms = list(dict.fromkeys(analyze_terms(query, self.analyzer)))
         if not terms:
-            return self.spark.createDataFrame(
-                [], "doc_id long, ext_id string, score double"
-            )
+            return self.spark.createDataFrame([], _SCORED)
         scored = dismax_scores(
             self.reader, terms, fields, tie=tie, k1=k1, b=b
         )
-        docmap = self.reader.docmap().select("doc_id", "ext_id")
-        return scored.join(docmap, "doc_id").select(
-            "doc_id", "ext_id", "score"
-        )
+        return self._join_docmap(scored).select("doc_id", "ext_id", "score")
 
     # -- conversation-level retrieval ------------------------------------------
     _CONV_AGGS = {"sum": F.sum, "max": F.max, "avg": F.avg}
@@ -1010,21 +959,17 @@ class SearchEngine:
             raise ValueError(f"agg must be one of {sorted(self._CONV_AGGS)}")
         node = self._parse(query, model)
         if node is None:
-            return self.spark.createDataFrame(
-                [], "conv_id string, score double, n_turns long"
+            return self.spark.createDataFrame([], _CONV_SCORED)
+        with self._compiled(node, model) as (scored, _):
+            docmap = self.reader.docmap().select("doc_id", "conv_id")
+            return (
+                scored.join(docmap, "doc_id")
+                .groupBy("conv_id")
+                .agg(
+                    self._CONV_AGGS[agg]("score").alias("score"),
+                    F.count("*").cast("long").alias("n_turns"),
+                )
             )
-        compiler = QueryCompiler(self.reader, model)
-        compiler.prepare(node)
-        scored = compiler.compile_query(node)
-        docmap = self.reader.docmap().select("doc_id", "conv_id")
-        return (
-            scored.join(docmap, "doc_id")
-            .groupBy("conv_id")
-            .agg(
-                self._CONV_AGGS[agg]("score").alias("score"),
-                F.count("*").cast("long").alias("n_turns"),
-            )
-        )
 
     def fetch_context(self, hits: DataFrame, m: int = 1) -> DataFrame:
         """Context-window expansion: for every hit turn, the turns within
@@ -1100,13 +1045,8 @@ class SearchEngine:
             raise ValueError("search_sorted needs at least one sort key")
         node = self._parse(query, model)
         if node is None:
-            return self.spark.createDataFrame(
-                [], "doc_id long, ext_id string, rank int, score double"
-            )
-        compiler = QueryCompiler(self.reader, model)
-        compiler.prepare(node)
-        try:
-            scored = compiler.compile_query(node)
+            return self._ranked([])
+        with self._compiled(node, model) as (scored, _):
             docmap = self.reader.docmap()
             if doc_filter is not None:
                 docmap = docmap.where(F.expr(doc_filter))
@@ -1125,16 +1065,7 @@ class SearchEngine:
                     else c.asc()
                 )
             order.append(F.asc("ext_id"))
-            rows = joined.orderBy(*order).limit(k).collect()
-        finally:
-            compiler.release()
-        out = [
-            (r["doc_id"], r["ext_id"], i + 1, float(r["score"]))
-            for i, r in enumerate(rows)
-        ]
-        return self.spark.createDataFrame(
-            out, "doc_id long, ext_id string, rank int, score double"
-        )
+            return self._ranked(_top_k_rows(joined, k, order))
 
     def search_rescore(
         self,
@@ -1183,18 +1114,7 @@ class SearchEngine:
                 ).alias("score"),
             )
         )
-        rows = (
-            combined.orderBy(F.desc("score"), F.asc("ext_id"))
-            .limit(k)
-            .collect()
-        )
-        out = [
-            (r["doc_id"], r["ext_id"], i + 1, float(r["score"]))
-            for i, r in enumerate(rows)
-        ]
-        return self.spark.createDataFrame(
-            out, "doc_id long, ext_id string, rank int, score double"
-        )
+        return self._ranked(_top_k_rows(combined, k))
 
     def search_collapsed(
         self, query: str, model: RetrievalModel, k: int = 100
@@ -1218,47 +1138,25 @@ class SearchEngine:
         """
         node = self._parse(query, model)
         if node is None:
-            return self.spark.createDataFrame(
-                [],
-                "conv_id string, doc_id long, ext_id string, "
-                "rank int, score double",
-            )
-        from pyspark.sql import Window
-
-        compiler = QueryCompiler(self.reader, model)
+            return self._ranked([], _COLLAPSED)
         # topk=None: block-max pruning keeps only the CORPUS-WIDE top-k
         # turns, but a conversation's best turn can rank below that
         # globally and still make the collapsed list — collapsing needs
         # the full scored set (same reasoning as doc_filter in search()).
-        compiler.prepare(node, topk=None)
-        try:
-            scored = compiler.compile_query(node)
+        with self._compiled(node, model) as (scored, _):
             dm = self.reader.docmap().select("doc_id", "conv_id", "ext_id")
-            w = Window.partitionBy("conv_id").orderBy(
-                F.desc("score"), F.asc("ext_id")
-            )
+            w = Window.partitionBy("conv_id").orderBy(*_reference_order())
             best = (
                 scored.join(dm, "doc_id")
                 .withColumn("_rn", F.row_number().over(w))
                 .where(F.col("_rn") == 1)
             )
-            rows = (
-                best.select("conv_id", "doc_id", "ext_id", "score")
-                .orderBy(F.desc("score"), F.asc("ext_id"))
-                .limit(k)
-                .collect()
+            return self._ranked(
+                _top_k_rows(
+                    best.select("conv_id", "doc_id", "ext_id", "score"), k
+                ),
+                _COLLAPSED,
             )
-        finally:
-            compiler.release()
-        out = [
-            (r["conv_id"], r["doc_id"], r["ext_id"], i + 1, float(r["score"]))
-            for i, r in enumerate(rows)
-        ]
-        return self.spark.createDataFrame(
-            out,
-            "conv_id string, doc_id long, ext_id string, "
-            "rank int, score double",
-        )
 
     def search_after(
         self,
@@ -1292,37 +1190,12 @@ class SearchEngine:
         pass the identical arguments you gave :meth:`search`."""
         a_score, a_ext = float(after[0]), str(after[1])
         node = self._parse(query, model, synonyms)
-        empty_schema = "doc_id long, ext_id string, rank int, score double"
         if node is None:
-            return self.spark.createDataFrame([], empty_schema)
-        compiler = QueryCompiler(self.reader, model)
-        compiler.prepare(node, topk=None)
-        try:
-            scored = compiler.compile_query(node)
-            docmap = self.reader.docmap()
-            if doc_filter is not None:
-                docmap = docmap.where(F.expr(doc_filter))
-            if boost is not None:
-                bexpr = F.coalesce(
-                    F.expr(boost).cast("double"), F.lit(1.0)
-                )
-                withext = (
-                    scored.withColumnRenamed("score", "_raw")
-                    .join(docmap, "doc_id")
-                    .select(
-                        "doc_id",
-                        "ext_id",
-                        (F.col("_raw") * bexpr).alias("score"),
-                    )
-                )
-            else:
-                withext = scored.join(
-                    docmap.select("doc_id", "ext_id"), "doc_id"
-                )
+            return self._ranked([])
+        with self._compiled(node, model) as (scored, _):
+            withext = self._join_docmap(scored, doc_filter, boost)
             if isinstance(model, UnrankedBoolean):
-                page = withext.where(F.col("ext_id") > a_ext).orderBy(
-                    F.asc("ext_id")
-                )
+                page = withext.where(F.col("ext_id") > a_ext)
             else:
                 page = withext.where(
                     (F.col("score") < F.lit(a_score))
@@ -1330,15 +1203,10 @@ class SearchEngine:
                         (F.col("score") == F.lit(a_score))
                         & (F.col("ext_id") > a_ext)
                     )
-                ).orderBy(F.desc("score"), F.asc("ext_id"))
-            rows = page.limit(k).collect()
-        finally:
-            compiler.release()
-        out = [
-            (r["doc_id"], r["ext_id"], i + 1, float(r["score"]))
-            for i, r in enumerate(rows)
-        ]
-        return self.spark.createDataFrame(out, empty_schema)
+                )
+            return self._ranked(
+                _top_k_rows(page, k, _reference_order(model))
+            )
 
     def term_vector(self, doc_id: int, field: str = "body") -> DataFrame:
         """Forward-index term vector of one document — the reference's
@@ -1450,36 +1318,16 @@ class SearchEngine:
         corrupt them. Block-max pruning runs at topk = k+1: the top-k
         excluding one doc is always contained in the corpus-wide
         top-(k+1), so the pruning stays provably exact."""
-        from .plans.models import BM25 as _BM25
-
-        model = model if model is not None else _BM25()
+        model = model if model is not None else BM25()
         terms = self.mlt_terms(
             doc_id, field, max_terms=max_terms, min_tf=min_tf, min_df=min_df
         )
-        empty_schema = "doc_id long, ext_id string, rank int, score double"
         if not terms:
-            return self.spark.createDataFrame([], empty_schema)
+            return self._ranked([])
         node = ast.Sum(tuple(ast.Term(t, field) for t in terms))
-        compiler = QueryCompiler(self.reader, model)
-        compiler.prepare(node, topk=k + 1)
-        try:
-            scored = compiler.compile_query(node).where(
-                F.col("doc_id") != int(doc_id)
-            )
-            docmap = self.reader.docmap().select("doc_id", "ext_id")
-            rows = (
-                scored.join(docmap, "doc_id")
-                .orderBy(F.desc("score"), F.asc("ext_id"))
-                .limit(k)
-                .collect()
-            )
-        finally:
-            compiler.release()
-        out = [
-            (r["doc_id"], r["ext_id"], i + 1, float(r["score"]))
-            for i, r in enumerate(rows)
-        ]
-        return self.spark.createDataFrame(out, empty_schema)
+        with self._compiled(node, model, topk=k + 1) as (scored, _):
+            scored = scored.where(F.col("doc_id") != int(doc_id))
+            return self._ranked(_top_k_rows(self._join_docmap(scored), k))
 
     def search_conversations(
         self, query: str, model: RetrievalModel, k: int = 100, agg: str = "sum"
@@ -1487,16 +1335,9 @@ class SearchEngine:
         """Eager top-k conversations: → DataFrame(conv_id, rank, score,
         n_turns), ordered desc score with asc conv_id tie-break (the
         reference's tie-break rule lifted to the conversation key)."""
-        rows = (
-            self.conversation_scores_df(query, model, agg=agg)
-            .orderBy(F.desc("score"), F.asc("conv_id"))
-            .limit(k)
-            .collect()
+        rows = _top_k_rows(
+            self.conversation_scores_df(query, model, agg=agg),
+            k,
+            [F.desc("score"), F.asc("conv_id")],
         )
-        out = [
-            (r["conv_id"], i + 1, float(r["score"]), r["n_turns"])
-            for i, r in enumerate(rows)
-        ]
-        return self.spark.createDataFrame(
-            out, "conv_id string, rank int, score double, n_turns long"
-        )
+        return self._ranked(rows, _CONVERSATIONS)

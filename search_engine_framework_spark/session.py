@@ -17,6 +17,22 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 _PKG_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def _host_cpus() -> int:
+    """CPUs this process may run on (affinity-aware, unlike cpu_count)."""
+    return len(os.sched_getaffinity(0))
+
+
+def _host_driver_memory() -> str:
+    """Half the host's physical memory (/proc/meminfo MemTotal): in
+    local mode the driver JVM is also the executor, and the other half
+    is left to the Python workers and the page cache."""
+    with open("/proc/meminfo") as fh:
+        for line in fh:
+            if line.startswith("MemTotal:"):
+                return f"{int(line.split()[1]) // 1024 // 2}m"
+    raise RuntimeError("MemTotal missing from /proc/meminfo")
+
+
 def get_spark(
     app_name: str = "search-engine-framework-spark",
     master: str | None = None,
@@ -29,10 +45,13 @@ def get_spark(
       hot conversations are the expected skew sources at 10^12-turn scale).
     - Arrow on: every Python crossing in this engine is a vectorized
       pandas UDF; row-at-a-time Python is banned (BASELINE.json input_hint).
-    - Shuffle partitions sized for local[32] tests; on a real cluster this
+    - ``local[N]`` over the host's CPUs and a driver heap of half its
+      memory unless ``SPARK_GRAFT_CPUS`` / ``SPARK_DRIVER_MEMORY`` say
+      otherwise.
+    - Shuffle partitions default to a fixed count; on a real cluster this
       is set per job from input size (see bench.py and index/build.py).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(_host_cpus())
     # Python workers resolve imports from PYTHONPATH + cwd, NOT the
     # driver's sys.path — a driver script run from outside the repo root
     # would build plans fine and then die inside the first pandas UDF
@@ -61,7 +80,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _host_driver_memory(),
+        )
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])

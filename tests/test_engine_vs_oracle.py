@@ -90,6 +90,25 @@ BATTERY = [
     ("#FIRST/8(#NEAR/2(search engine))", RB),
     ("#NEAR/4(#FIRST/10(search) engine)", BM),
     ("#SYN(#FIRST/2(search) index)", RB),
+    # Bag-of-words queries over the reference query set's vocabulary
+    # (sources/transcripts.py _HEAD_WORDS), under each model's default
+    # wrap. NOT the reference query set itself, which this repository
+    # does not hold (tests/test_reference_queryset.py).
+    ("obama family tree", BM),
+    ("obama family tree", IND),
+    ("obama family tree", RB),
+    ("cheap internet", BM),
+    ("cheap internet", IND),
+    ("cheap internet", RB),
+    ("wedding budget calculator", BM),
+    ("wedding budget calculator", IND),
+    ("wedding budget calculator", RB),
+    ("used car parts", BM),
+    ("used car parts", IND),
+    ("used car parts", RB),
+    ("gmat prep classes", BM),
+    ("gmat prep classes", IND),
+    ("gmat prep classes", RB),
 ]
 
 

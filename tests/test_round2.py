@@ -738,6 +738,174 @@ def test_batched_letor_releases_cache(spark, tiny_index):
     assert after <= before, "batch_query_features leaked persisted RDDs"
 
 
+# Each case uses a term set no other test queries, so a postings cache it
+# leaks cannot coincide with one an earlier test already registered.
+_LAZY_CALLS = {
+    "search_df": lambda e, m: e.search_df("#AND(volvo annuity)", m.Indri()),
+    "conversation_scores_df": lambda e, m: e.conversation_scores_df(
+        "pampered antenna", m.BM25()
+    ),
+    "search_rescore": lambda e, m: e.search_rescore(
+        "gmat classes", m.BM25(), "#NEAR/1(gmat classes)", m.BM25(),
+        window=10, k=5,
+    ),
+    "search_conversations": lambda e, m: e.search_conversations(
+        "poker wilson", m.BM25(), k=5
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_LAZY_CALLS))
+def test_lazy_entry_points_release_cache(spark, tiny_index, name):
+    """The lazy compiled entry points (and the eager ones built on them)
+    persist no postings cache that outlives the call."""
+    from search_engine_framework_spark.engine import SearchEngine
+    from search_engine_framework_spark.plans import models
+
+    paths, _rows, _tdf = tiny_index
+    eng = SearchEngine(spark, paths)
+    before = len(spark.sparkContext._jsc.getPersistentRDDs())
+    _LAZY_CALLS[name](eng, models).collect()
+    after = len(spark.sparkContext._jsc.getPersistentRDDs())
+    assert after <= before, f"{name} leaked persisted RDDs"
+
+
+_RANKED_SCHEMA = "struct<doc_id:bigint,ext_id:string,rank:int,score:double>"
+_QID_SCHEMA = (
+    "struct<qid:string,doc_id:bigint,ext_id:string,rank:int,score:double>"
+)
+_STOP = "the of and"  # all stopwords: the explicit empty-result branches
+
+
+def _after_cursor(e, m):
+    last = e.search("search engine", m.BM25(), k=4).collect()[-1]
+    return (last["score"], last["ext_id"])
+
+
+# name → (call(engine, models, query), schema, order key per row or None
+# for per-qid frames, which the test orders by (-score, ext_id) per qid)
+_TAIL_CASES = {
+    "search_fastpath": (
+        lambda e, m, q: e.search(q, m.BM25(), k=10),
+        _RANKED_SCHEMA, lambda r: (-r["score"], r["ext_id"]),
+    ),
+    "search_distributed": (
+        lambda e, m, q: e.search(q, m.BM25(), k=10, prune_min_blocks=10**9),
+        _RANKED_SCHEMA, lambda r: (-r["score"], r["ext_id"]),
+    ),
+    "search_distributed_unranked": (
+        lambda e, m, q: e.search(q, m.UnrankedBoolean(), k=10),
+        _RANKED_SCHEMA, lambda r: r["ext_id"],
+    ),
+    "search_many": (
+        lambda e, m, q: e.search_many(
+            {"b": q, "a": "heart rate"} if q != _STOP else {"a": q},
+            m.BM25(), k=6,
+        ),
+        _QID_SCHEMA, None,
+    ),
+    "search_bulk_bm25": (
+        lambda e, m, q: e.search_bulk_bm25(
+            {"b": q, "a": "heart rate"} if q != _STOP else {"a": q}, k=6
+        ),
+        _QID_SCHEMA, None,
+    ),
+    "vsm_search": (
+        lambda e, m, q: e.vsm_search(q, k=10),
+        _RANKED_SCHEMA, lambda r: (-r["score"], r["ext_id"]),
+    ),
+    "vsm_search_rocchio": (
+        lambda e, m, q: e.vsm_search_rocchio(q, k=10, fb_k=5),
+        _RANKED_SCHEMA, lambda r: (-r["score"], r["ext_id"]),
+    ),
+    "search_bm25f": (
+        lambda e, m, q: e.search_bm25f(q, {"body": 1.0, "role": 2.0}, k=10),
+        _RANKED_SCHEMA, lambda r: (-r["score"], r["ext_id"]),
+    ),
+    "search_sorted": (
+        lambda e, m, q: e.search_sorted(q, m.BM25(), ["turn_idx desc"], k=10),
+        # ext_id = conv_id:turn_idx
+        _RANKED_SCHEMA,
+        lambda r: (-int(r["ext_id"].rsplit(":", 1)[1]), r["ext_id"]),
+    ),
+    "search_rescore": (
+        lambda e, m, q: e.search_rescore(
+            q, m.BM25(), "#NEAR/1(search engine)", m.BM25(), window=20, k=10
+        ),
+        _RANKED_SCHEMA, lambda r: (-r["score"], r["ext_id"]),
+    ),
+    "search_collapsed": (
+        lambda e, m, q: e.search_collapsed(q, m.BM25(), k=10),
+        "struct<conv_id:string,doc_id:bigint,ext_id:string,rank:int,"
+        "score:double>",
+        lambda r: (-r["score"], r["ext_id"]),
+    ),
+    "search_after": (
+        lambda e, m, q: e.search_after(q, m.BM25(), _after_cursor(e, m), k=10),
+        _RANKED_SCHEMA, lambda r: (-r["score"], r["ext_id"]),
+    ),
+    "more_like_this": (
+        # no term passes min_df=10**9: the explicit no-terms branch
+        lambda e, m, q: e.more_like_this(
+            e.search("search engine", m.BM25(), k=1).collect()[0]["doc_id"],
+            k=10, min_tf=1, min_df=10**9 if q == _STOP else 2,
+        ),
+        _RANKED_SCHEMA, lambda r: (-r["score"], r["ext_id"]),
+    ),
+    "search_conversations": (
+        lambda e, m, q: e.search_conversations(q, m.BM25(), k=10),
+        "struct<conv_id:string,rank:int,score:double,n_turns:bigint>",
+        lambda r: (-r["score"], r["conv_id"]),
+    ),
+}
+
+
+@pytest.mark.parametrize("name", list(_TAIL_CASES))
+def test_ranked_entry_points_share_one_tail(
+    spark, tiny_index, monkeypatch, name
+):
+    """Every ranked entry point returns its documented schema — also from
+    its empty-result branch — with ranks contiguous from 1 (per qid) and
+    rows in its documented order."""
+    from search_engine_framework_spark import fastpath
+    from search_engine_framework_spark.engine import SearchEngine
+    from search_engine_framework_spark.plans import models
+
+    answered = []  # fast-path results, None where it declined
+    driver = fastpath.bm25_topk_driver
+    monkeypatch.setattr(
+        fastpath, "bm25_topk_driver",
+        lambda *a, **kw: answered.append(driver(*a, **kw)) or answered[-1],
+    )
+    paths, _rows, _tdf = tiny_index
+    eng = SearchEngine(spark, paths)
+    call, schema, key = _TAIL_CASES[name]
+    df = call(eng, models, "search engine index")
+    if name == "search_fastpath":
+        assert answered and answered[-1] is not None
+    if name == "search_distributed":
+        assert not answered
+    assert df.schema.simpleString() == schema
+    rows = df.collect()
+    assert rows
+    if key is None:
+        assert rows == sorted(rows, key=lambda r: (r["qid"], r["rank"]))
+        by_qid = {}
+        for r in rows:
+            by_qid.setdefault(r["qid"], []).append(r)
+        assert sorted(by_qid) == ["a", "b"]
+        groups = list(by_qid.values())
+        key = lambda r: (-r["score"], r["ext_id"])  # noqa: E731
+    else:
+        groups = [rows]
+    for g in groups:
+        assert [r["rank"] for r in g] == list(range(1, len(g) + 1))
+        assert [key(r) for r in g] == sorted(key(r) for r in g)
+    empty = call(eng, models, _STOP)
+    assert empty.schema.simpleString() == schema
+    assert empty.count() == 0
+
+
 def test_search_bulk_bm25_bit_identical_to_search_many(spark, tiny_index):
     """The join-based bulk evaluator must match the per-query-plan path
     bit-for-bit (same child-order float fold), including duplicate query
