@@ -78,7 +78,7 @@ sys.path.insert(
 
 import pyspark.sql.functions as F  # noqa: E402
 
-from search_engine_framework_spark.session import get_spark  # noqa: E402
+from search_engine_framework_spark.session import _host_cpus, get_spark  # noqa: E402
 from search_engine_framework_spark.engine import SearchEngine  # noqa: E402
 from search_engine_framework_spark.functions.analyzer import AnalyzerConfig  # noqa: E402
 from search_engine_framework_spark.index.build import build_index  # noqa: E402
@@ -187,7 +187,8 @@ def _leg(
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # as get_spark: the host's CPUs unless SPARK_GRAFT_CPUS says otherwise
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(_host_cpus())
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
     calib_pre = _calibrate()
     spark = get_spark(

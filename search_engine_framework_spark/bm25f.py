@@ -42,6 +42,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from .index.reader import IndexReader
+from .session import local_frame
 
 __all__ = ["bm25f_scores", "bm25f_tilde_tf", "dismax_scores"]
 
@@ -63,7 +64,7 @@ def bm25f_tilde_tf(
     pairs = {(t, f) for t in terms for f in fields}
     spark = reader.spark
     if not pairs:
-        return spark.createDataFrame([], "doc_id long, term string, tft double")
+        return local_frame(spark, [], "doc_id long, term string, tft double")
     post = reader.fetch_postings(pairs, need_positions=False).select(
         "term", "field", "doc_id", "tf", "doclen"
     )
@@ -193,9 +194,11 @@ def dismax_scores(
         avg = reader.avg_doclen(f)
         const_rows.append((t, f, float(idf), float(avg)))
     if not const_rows:
-        return reader.spark.createDataFrame([], "doc_id long, score double")
-    consts = reader.spark.createDataFrame(
-        const_rows, "term string, field string, idf double, avg double"
+        return local_frame(reader.spark, [], "doc_id long, score double")
+    consts = local_frame(
+        reader.spark,
+        const_rows,
+        "term string, field string, idf double, avg double",
     )
     tf = F.col("tf").cast("double")
     dl = F.col("doclen").cast("double")

@@ -20,6 +20,7 @@ from .plans import ast
 from .plans.compiler import QueryCompiler
 from .plans.models import BM25, RetrievalModel, UnrankedBoolean
 from .plans.parser import parse_query
+from .session import local_frame
 
 # Result schemas. Ranked frames carry ``rank`` 1..n in result order.
 _RANKED = "doc_id long, ext_id string, rank int, score double"
@@ -153,9 +154,11 @@ class SearchEngine:
             return self._ranked([])
         # Driver-side fast path (fastpath.py): flat #SUM BM25 over a
         # driver-readable index whose matched postings fit the budget is
-        # answered with pyarrow + the numpy codec — no Spark job at all,
-        # bit-identical ranks AND scores (identity argument in the module
-        # docstring; locked by tests/test_fastpath.py). Skipped when the
+        # answered with pyarrow + the numpy codec, and its rows come back
+        # as a LocalRelation (``_ranked``): no Spark job from the query
+        # through the caller's collect, and bit-identical ranks AND scores
+        # (identity argument in the module docstring; both locked by
+        # tests/test_fastpath.py). Skipped when the
         # caller tunes block pruning (they are exercising the distributed
         # path) and for every query above the gates — head-term queries
         # on a 10^12-turn corpus always run the distributed plan.
@@ -224,7 +227,7 @@ class SearchEngine:
                 continue
             nodes[qid] = node
         if not nodes:
-            return self.spark.createDataFrame([], _RANKED_PER_QID)
+            return local_frame(self.spark, [], _RANKED_PER_QID)
 
         all_pairs = set()
         need_pos = False
@@ -322,7 +325,7 @@ class SearchEngine:
             for qid, text in queries.items()
         }
         pairs = {(t, field) for ts in terms_by_qid.values() for t in ts}
-        empty = self.spark.createDataFrame([], _RANKED_PER_QID)
+        empty = local_frame(self.spark, [], _RANKED_PER_QID)
         if not pairs:
             return empty
 
@@ -342,8 +345,10 @@ class SearchEngine:
         if not qt_rows:
             return empty
         qt = F.broadcast(
-            self.spark.createDataFrame(
-                qt_rows, "qid string, tix int, term string, idf double"
+            local_frame(
+                self.spark,
+                qt_rows,
+                "qid string, tix int, term string, idf double",
             )
         )
 
@@ -551,7 +556,8 @@ class SearchEngine:
                 (j, t, f, df_, model_idf(m, n, df_),
                  self.reader.avg_doclen(f), boost)
             )
-        childs = self.spark.createDataFrame(
+        childs = local_frame(
+            self.spark,
             child_rows,
             "child int, term string, field string, df long, idf double, "
             "avg_doclen double, boost double",
@@ -693,9 +699,11 @@ class SearchEngine:
         )
 
     def _ranked(self, rows, schema: str = _RANKED) -> DataFrame:
-        """Materialize ``rows`` (already in result order) as ``schema``:
-        ``rank`` is the 1-based position, every other column is read from
-        the row by name, ``score`` as a Python float."""
+        """Materialize ``rows`` (already in result order) as ``schema``
+        over a LocalRelation (``session.local_frame``: collecting it runs
+        no Spark job): ``rank`` is the 1-based position, every other
+        column is read from the row by name, ``score`` as a Python
+        float."""
         cols = [c.split()[0] for c in schema.split(",")]
         out = [
             tuple(
@@ -704,7 +712,7 @@ class SearchEngine:
             )
             for i, r in enumerate(rows, 1)
         ]
-        return self.spark.createDataFrame(out, schema)
+        return local_frame(self.spark, out, schema)
 
     def _ranked_per_qid(
         self, frame: DataFrame, k: int, order: list | None = None
@@ -722,7 +730,7 @@ class SearchEngine:
             (r["qid"], r["doc_id"], r["ext_id"], int(r["rank"]), float(r["score"]))
             for r in sorted(rows, key=lambda r: (r["qid"], r["rank"]))
         ]
-        return self.spark.createDataFrame(out, _RANKED_PER_QID)
+        return local_frame(self.spark, out, _RANKED_PER_QID)
 
     def vsm_search(self, query: str, k: int = 100, field: str = "body") -> DataFrame:
         """lnc.ltc vector-space retrieval (the reference's f18 scorer as a
@@ -803,7 +811,7 @@ class SearchEngine:
         raw-score order)."""
         node = self._parse(query, model, synonyms)
         if node is None:
-            return self.spark.createDataFrame([], _SCORED)
+            return local_frame(self.spark, [], _SCORED)
         with self._compiled(node, model) as (scored, _):
             return self._join_docmap(scored, doc_filter, boost).select(
                 "doc_id", "ext_id", "score"
@@ -908,7 +916,7 @@ class SearchEngine:
             cache[key] = rows
             while len(cache) > self._CACHE_MAX:
                 cache.popitem(last=False)
-        return self.spark.createDataFrame(rows, _RANKED)
+        return local_frame(self.spark, rows, _RANKED)
 
     def dismax_scores_df(
         self,
@@ -934,7 +942,7 @@ class SearchEngine:
                 )
         terms = list(dict.fromkeys(analyze_terms(query, self.analyzer)))
         if not terms:
-            return self.spark.createDataFrame([], _SCORED)
+            return local_frame(self.spark, [], _SCORED)
         scored = dismax_scores(
             self.reader, terms, fields, tie=tie, k1=k1, b=b
         )
@@ -959,7 +967,7 @@ class SearchEngine:
             raise ValueError(f"agg must be one of {sorted(self._CONV_AGGS)}")
         node = self._parse(query, model)
         if node is None:
-            return self.spark.createDataFrame([], _CONV_SCORED)
+            return local_frame(self.spark, [], _CONV_SCORED)
         with self._compiled(node, model) as (scored, _):
             docmap = self.reader.docmap().select("doc_id", "conv_id")
             return (

@@ -33,6 +33,7 @@ from pyspark.sql.functions import pandas_udf
 from ..functions.scoring import bm25_idf, bm25_tf_weight, model_idf
 from ..index.reader import IndexReader
 from ..operators.positional import near_match, syn_merge, window_match
+from ..session import local_frame
 from . import ast
 from .models import BM25, Indri, RankedBoolean, RetrievalModel, UnrankedBoolean
 
@@ -710,7 +711,7 @@ class QueryCompiler:
         )
 
     def _empty_sl(self) -> SLResult:
-        df = self.spark.createDataFrame([], "doc_id long, score double")
+        df = local_frame(self.spark, [], "doc_id long, score double")
         return SLResult(df)
 
     # ------------------------------------------------------------- entry point

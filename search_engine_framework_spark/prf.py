@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 
 from .engine import SearchEngine
 from .plans.models import RetrievalModel
+from .session import local_frame
 
 
 def expansion_terms(
@@ -45,7 +46,7 @@ def expansion_terms(
     c_total = float(reader.sum_doclen(field))
 
     top = F.broadcast(
-        spark.createDataFrame(ranking, "doc_id long, doc_score double")
+        local_frame(spark, ranking, "doc_id long, doc_score double")
     )
     dt = reader.doc_terms().where(F.col("field") == field).join(top, "doc_id")
 
@@ -105,7 +106,7 @@ def expansion_terms_many(
     if not rows:
         return {qid: [] for qid in rankings}
     top = F.broadcast(
-        spark.createDataFrame(rows, "qid string, doc_id long, doc_score double")
+        local_frame(spark, rows, "qid string, doc_id long, doc_score double")
     )
     dt = reader.doc_terms().where(F.col("field") == field).join(top, "doc_id")
     ctf = (

@@ -3,13 +3,21 @@
 Local tests run on local[N]; the same configs are what we would submit with
 ``spark-submit --py-files`` on a real cluster (AQE, skew-join handling,
 Arrow). Nothing here is test-only.
+
+``local_frame`` is the one way driver-held rows become a DataFrame on the
+query path (a JVM LocalRelation, not a parallelized Python list).
 """
 
 from __future__ import annotations
 
+import functools
 import os
+from collections.abc import Iterable
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType, StructType, _make_type_verifier
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -100,3 +108,41 @@ def get_spark(
             os.environ.pop("PYTHONPATH", None)
         else:
             os.environ["PYTHONPATH"] = pp
+
+
+@functools.lru_cache(maxsize=64)
+def _ddl_schemas(ddl: str) -> tuple[StructType, pa.Schema]:
+    """Spark and Arrow schemas of a DDL string. Parsing one is a JVM
+    round-trip of a few ms; the callers' DDL strings are a few constants."""
+    struct = DataType.fromDDL(ddl)
+    return struct, to_arrow_schema(struct)
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[tuple], ddl: str
+) -> DataFrame:
+    """``rows`` (tuples in ``ddl``'s column order) as a DataFrame over a
+    JVM ``LocalRelation``: the rows go over in Arrow batches, and
+    collecting the frame is a ``LocalTableScan`` — no Spark job, no
+    Python worker. A Python list given to ``createDataFrame`` would
+    instead become a parallelized Python RDD, whose every collect runs a
+    job of Python-worker tasks to hand back rows the driver already held.
+
+    Each row is checked against the schema as ``createDataFrame``'s
+    ``verifySchema`` does (Arrow alone would truncate a float in an int
+    column), so a type or arity mismatch raises instead of converting."""
+    struct, schema = _ddl_schemas(ddl)
+    rows = list(rows)
+    verify = _make_type_verifier(struct)
+    for row in rows:
+        verify(row)
+    table = pa.Table.from_arrays(
+        [
+            pa.array([row[i] for row in rows], type=field.type)
+            for i, field in enumerate(schema)
+        ],
+        schema=schema,
+    )
+    # a fresh StructType: the frame keeps it as its schema, and the cached
+    # one must not be reachable for callers to mutate
+    return spark.createDataFrame(table, StructType.fromJson(struct.jsonValue()))

@@ -26,6 +26,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from .index.reader import IndexReader
+from .session import local_frame
 
 
 def vsm_scores(
@@ -50,11 +51,11 @@ def vsm_scores(
         qwt[t] = w
         qvec_len += w * w
     if not qwt:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return local_frame(spark, [], "doc_id long, score double")
 
     dt = reader.doc_terms().where(F.col("field") == field)
     qw_df = F.broadcast(
-        spark.createDataFrame(list(qwt.items()), "term string, qw double")
+        local_frame(spark, qwt.items(), "term string, qw double")
     )
     cand = dt.join(qw_df, "term").select(
         "doc_id",
@@ -95,11 +96,11 @@ def vsm_scores_weighted(
     spark = reader.spark
     qwt = {t: float(w) for t, w in qweights.items() if w != 0.0}
     if not qwt:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return local_frame(spark, [], "doc_id long, score double")
     qvec_len = sum(w * w for w in qwt.values())
     dt = reader.doc_terms().where(F.col("field") == field)
     qw_df = F.broadcast(
-        spark.createDataFrame(list(qwt.items()), "term string, qw double")
+        local_frame(spark, qwt.items(), "term string, qw double")
     )
     cand = dt.join(qw_df, "term").select(
         "doc_id",
@@ -162,7 +163,7 @@ def rocchio_expand(
             qvec[t] = qvec.get(t, 0.0) + math.log(n / df)
 
     ids_df = F.broadcast(
-        spark.createDataFrame([(int(d),) for d in fb_doc_ids], "doc_id long")
+        local_frame(spark, [(int(d),) for d in fb_doc_ids], "doc_id long")
     )
     dt = reader.doc_terms().where(F.col("field") == field)
     fb = dt.join(ids_df, "doc_id")

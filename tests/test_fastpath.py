@@ -136,3 +136,31 @@ def test_fastpath_engages_on_boosted(engine):
     assert flat is not None and flat[1][2] == 2.0
     got = fastpath.bm25_topk_driver(engine.reader, flat, BM25(), 10)
     assert got is not None and len(got) == 10
+
+
+def _jobs_run_by(sc, group, action):
+    """Spark job ids that ``action()`` ran, via a job group."""
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_fastpath_result_tail_runs_no_spark_job(engine, spark):
+    """A fast-path answer and a request-cache hit hand back rows the
+    driver already holds: collecting them must not start a Spark job
+    (the result is a LocalRelation, not a parallelized Python list)."""
+    sc = spark.sparkContext
+    q = "search engine index"
+    engine.search(q, BM25(), k=10).collect()  # warm the reader's caches
+    engine.search_cached(q, BM25(), k=10).collect()  # fill the cache
+    assert _jobs_run_by(
+        sc, "fastpath-tail",
+        lambda: engine.search(q, BM25(), k=10).collect(),
+    ) == []
+    assert _jobs_run_by(
+        sc, "cache-hit-tail",
+        lambda: engine.search_cached(q, BM25(), k=10).collect(),
+    ) == []

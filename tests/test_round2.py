@@ -906,6 +906,35 @@ def test_ranked_entry_points_share_one_tail(
     assert empty.count() == 0
 
 
+def test_ranked_tail_frame_round_trips_exactly(spark):
+    """``session.local_frame``, which materializes every ranked tail,
+    hands each value back exactly, keeps the schema when there are no
+    rows, and rejects a float in an int column (as createDataFrame's
+    verifySchema did) instead of truncating it."""
+    from search_engine_framework_spark.session import local_frame
+
+    ddl = "id long, rank int, score double, ext_id string"
+    ranks = [-(2**31), 2**31 - 1, 0, 1, None]
+    doubles = [-0.0, 5e-324, 1.7976931348623157e308, float("inf"), float("nan")]
+    strings = ['say "hi"', "it's", "\x01", "naïve 検索", None]
+    rows = [
+        (2**62 + i, r, d, s)
+        for i, (r, d, s) in enumerate(zip(ranks, doubles, strings))
+    ]
+    got = [tuple(r) for r in local_frame(spark, rows, ddl).collect()]
+    assert [(i, r, s) for i, r, _, s in got] == [
+        (i, r, s) for i, r, _, s in rows
+    ]
+    assert [d.hex() for _, _, d, _ in got] == [d.hex() for d in doubles]
+    empty = local_frame(spark, [], ddl)
+    assert empty.schema.simpleString() == (
+        "struct<id:bigint,rank:int,score:double,ext_id:string>"
+    )
+    assert empty.collect() == []
+    with pytest.raises(TypeError):
+        local_frame(spark, [(1, 2.5, 0.0, "x")], ddl)
+
+
 def test_search_bulk_bm25_bit_identical_to_search_many(spark, tiny_index):
     """The join-based bulk evaluator must match the per-query-plan path
     bit-for-bit (same child-order float fold), including duplicate query
