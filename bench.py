@@ -25,9 +25,8 @@ Components
                      against the on-disk documents index (the
                      BASELINE.json latency metric).
   bm25_distributed_p50 — same query set with the driver fast path
-                     disabled (SEFS_DRIVER_TOPK=0) and the default
-                     block-max gate: the plain distributed path, the
-                     round-over-round comparable number.
+                     disabled (SEFS_DRIVER_TOPK=0): the distributed
+                     plan, the round-over-round comparable number.
   boolean/positional/indri — one representative structured query each.
   neardup_minhash  — MinHash-LSH near-dup pipeline over documents.
   simhash          — 64-bit SimHash + banded pair search over documents.
@@ -214,7 +213,9 @@ def main() -> None:
 
     def run_build():
         shutil.rmtree(ix_dir, ignore_errors=True)
-        build_index(spark, corpus, ix_dir, fields=("body",), n_buckets=int(cpus))
+        # constant layout (as the documents index below): the index must
+        # not change with the host's CPU count
+        build_index(spark, corpus, ix_dir, fields=("body",), n_buckets=8)
 
     _leg(timings, extra, "index_build", run_build)
     extra["index_build_turns"] = n_turns
@@ -254,12 +255,9 @@ def main() -> None:
 
     _leg(timings, extra, "bm25_queryset", run_queryset)
 
-    # Plain distributed BM25 path: driver fast path off (SEFS_DRIVER_TOPK=0)
-    # and the DEFAULT block-max gate (which rightly declines two extra jobs
-    # at this index size).  This is the number comparable round-over-round
-    # and to a multi-executor cluster, where the local fast path is gated
-    # off; the fast-path p50 above and the forced-pruned p50 below are the
-    # two deliberate A/B extremes around it.
+    # Distributed BM25 path: driver fast path off (SEFS_DRIVER_TOPK=0).
+    # This is the number comparable round-over-round and to a
+    # multi-executor cluster, where the local fast path is gated off.
     os.environ["SEFS_DRIVER_TOPK"] = "0"
     try:
         engine.search(BM25_QUERIES[0], BM25(), k=10)  # warm distributed plan
@@ -275,21 +273,6 @@ def main() -> None:
         _leg(timings, extra, "bm25_queryset_distributed", run_distributed)
     finally:
         os.environ.pop("SEFS_DRIVER_TOPK", None)
-
-    # Block-max pruning evidence (codec max_tf metadata →
-    # compiler._bm25_block_prune): forced engagement — at this tiny index
-    # the default threshold correctly declines the 2 extra jobs, at scale
-    # the skipped decode dominates. Counters show blocks never decoded.
-    def run_pruned():
-        lat_p = []
-        for q in BM25_QUERIES:
-            t0 = time.time()
-            engine.search(q, BM25(), k=10, prune_min_blocks=1)
-            lat_p.append(time.time() - t0)
-        return {"bm25_pruned_p50": round(statistics.median(lat_p), 3)}
-
-    _leg(timings, extra, "bm25_queryset_pruned", run_pruned)
-    extra.update(engine.decode_metrics())
 
     # Batched evaluation of the SAME query set: one stats job + one shared
     # postings scan + one ranking window for all queries (engine.search_many)

@@ -743,10 +743,9 @@ def q_boosted_terms(spark, sf_dir):
     full engine path (parser → Boost AST → compiler fold). Exactly
     representable boost literals so the twin's arithmetic is
     IEEE-identical; boosted flat #SUM queries take the driver fast path
-    AND block-max prune like unboosted ones — both carry the per-child
-    multiplier through their bounds (engine._flat_sum_weighted /
-    compiler._bm25_block_prune's weighted upper bounds; tests assert
-    engagement) — with scores bit-identical either way."""
+    like unboosted ones — it carries the per-child multiplier
+    (compiler._flat_sum_weighted) — with scores bit-identical to the
+    distributed plan."""
     from .plans.models import BM25
 
     eng = get_engine(spark, sf_dir)

@@ -113,7 +113,6 @@ class SearchEngine:
         query: str,
         model: RetrievalModel,
         k: int = 100,
-        prune_min_blocks: int | None = None,
         doc_filter: str | None = None,
         boost: str | None = None,
         synonyms: dict | None = None,
@@ -132,13 +131,9 @@ class SearchEngine:
         ``boost`` — optional SQL double expression over docmap metadata
         columns multiplied into the relevance score (the Lucene
         FunctionScoreQuery analog; see :meth:`search_df`). Boosted
-        queries skip the driver fast path and block-max pruning: both
-        are exact only for the raw-score order, and a boost can lift a
-        doc from anywhere in the raw ranking into the top-k.
-
-        ``prune_min_blocks`` overrides the block-max pruning engagement
-        threshold (plans/compiler._PRUNE_MIN_BLOCKS; 0 forces pruning on
-        any BM25 #SUM query, huge values disable it).
+        queries skip the driver fast path: it is exact only for the
+        raw-score order, and a boost can lift a doc from anywhere in the
+        raw ranking into the top-k.
 
         ``doc_filter`` — optional SQL boolean over the docmap's metadata
         columns (role/tool/conv_id/turn_idx/ts + any keep_extra columns),
@@ -158,14 +153,12 @@ class SearchEngine:
         # as a LocalRelation (``_ranked``): no Spark job from the query
         # through the caller's collect, and bit-identical ranks AND scores
         # (identity argument in the module docstring; both locked by
-        # tests/test_fastpath.py). Skipped when the
-        # caller tunes block pruning (they are exercising the distributed
-        # path) and for every query above the gates — head-term queries
-        # on a 10^12-turn corpus always run the distributed plan.
+        # tests/test_fastpath.py). Skipped for every query above the
+        # gates — head-term queries on a 10^12-turn corpus always run the
+        # distributed plan.
         if (
             doc_filter is None
             and boost is None
-            and prune_min_blocks is None
             and isinstance(model, BM25)
             # MultiReader federates several physical indexes — the
             # driver fast path reads ONE index's files, so it opts out
@@ -181,13 +174,7 @@ class SearchEngine:
                         {"doc_id": d, "ext_id": e, "score": s}
                         for d, e, s in hit
                     )
-        # topk enables block-max decode pruning on the BM25 #SUM fast path
-        # (exact top-k; no-op for other models/trees — compiler.prepare).
-        # A doc_filter disables it: pruning keeps only the CORPUS-WIDE
-        # top-k, but the filtered top-k can contain docs ranked below
-        # that globally — the filter needs the full scored list.
-        topk = None if (doc_filter is not None or boost is not None) else k
-        with self._compiled(node, model, topk, prune_min_blocks) as (scored, _):
+        with self._compiled(node, model) as (scored, _):
             withext = self._join_docmap(scored, doc_filter, boost)
             return self._ranked(
                 _top_k_rows(withext, k, _reference_order(model))
@@ -215,8 +202,7 @@ class SearchEngine:
         top-k is one ``row_number`` window over the union of scored frames.
 
         Rank/score-identical to ``search`` per query (same plans, same
-        tie-break); block-max pruning stays off (its θ-threshold is
-        per-query — a shared cache can't prune per-query soundly).
+        tie-break).
         All-stopword/empty queries contribute no rows (the trec sink's
         dummy-row rule handles absent qids, sinks/trec.py).
         """
@@ -400,11 +386,8 @@ class SearchEngine:
             isinstance(model, BM25)
             and QueryCompiler._flat_sum_pairs(node) is not None
         )
-        # topk=None: with a topk the BM25 block-max seed pass would run a
-        # real Spark job (fetch + collect of seed partials) — explain must
-        # stay action-free. The pruned path's actual decode counters are
-        # decode_metrics()'s job. prepare()'s dictionary seek is the ONE
-        # stats lookup; its stats feed the pairs report below.
+        # prepare()'s dictionary seek is the ONE stats lookup; its stats
+        # feed the pairs report below.
         with self._compiled(node, model) as (scored, stats):
             plan = scored._jdf.queryExecution().executedPlan().toString()
         est_postings = sum(
@@ -417,8 +400,7 @@ class SearchEngine:
             "buckets": buckets,
             "fastpath_eligible": fastpath,
             # pre-execution cost estimate from dictionary stats alone:
-            # postings the scan would decode with NO block-max pruning
-            # (the pruned path's blocks_decoded counter reports actuals)
+            # the postings and blocks the scan would decode
             "est_postings": est_postings,
             "est_blocks": sum(
                 -(-int(stats.get((t, f), {}).get("df", 0)) // block)
@@ -608,10 +590,11 @@ class SearchEngine:
         )
 
     def decode_metrics(self) -> dict:
-        """Cumulative block-decode counters (block-max pruning evidence):
-        {"blocks_decoded": n, "blocks_skipped": n}."""
-        dec, skip = self.reader.decode_counters
-        return {"blocks_decoded": dec.value, "blocks_skipped": skip.value}
+        """Always ``{"blocks_decoded": 0, "blocks_skipped": 0}``. No query
+        path skips blocks, so there is nothing to count; the method stays
+        only because the benchmark (perfbench/workloads.py) reads these
+        two keys on every search run."""
+        return {"blocks_decoded": 0, "blocks_skipped": 0}
 
     def _parse(
         self, query: str, model, synonyms: dict | None = None
@@ -649,13 +632,7 @@ class SearchEngine:
             )
 
     @contextmanager
-    def _compiled(
-        self,
-        node: ast.Node,
-        model: RetrievalModel,
-        topk: int | None = None,
-        prune_min_blocks: int | None = None,
-    ):
+    def _compiled(self, node: ast.Node, model: RetrievalModel):
         """Compile scope → (scored (doc_id, score) frame, per-(term, field)
         stats). ``prepare`` persists the query's decoded postings and the
         scope releases them on exit, so actions run inside it read the
@@ -663,9 +640,7 @@ class SearchEngine:
         leaves no persisted postings behind."""
         compiler = QueryCompiler(self.reader, model)
         try:
-            compiler.prepare(
-                node, topk=topk, prune_min_blocks=prune_min_blocks
-            )
+            compiler.prepare(node)
             yield compiler.compile_query(node), compiler._stats
         finally:
             compiler.release()
@@ -807,8 +782,7 @@ class SearchEngine:
         ts-based recency decay. One multiply per matched doc on the
         already-joined docmap — no extra scan or shuffle. Boosted
         queries can reorder docs arbitrarily, so they skip the driver
-        fast path and block-max pruning (both are sound only for the
-        raw-score order)."""
+        fast path (it is sound only for the raw-score order)."""
         node = self._parse(query, model, synonyms)
         if node is None:
             return local_frame(self.spark, [], _SCORED)
@@ -1099,8 +1073,8 @@ class SearchEngine:
         → DataFrame(doc_id, ext_id, rank, score) — combined-score
         order, (score desc, ext_id asc) ties, top ``k``.
 
-        Cost: first pass = :meth:`search` (fast path / block pruning
-        eligible as usual); second pass = one scored-match plan joined
+        Cost: first pass = :meth:`search` (fast path eligible as
+        usual); second pass = one scored-match plan joined
         against a ``window``-row broadcast — the secondary query's cost
         is bounded by its own match set, never the window by the
         corpus."""
@@ -1147,10 +1121,6 @@ class SearchEngine:
         node = self._parse(query, model)
         if node is None:
             return self._ranked([], _COLLAPSED)
-        # topk=None: block-max pruning keeps only the CORPUS-WIDE top-k
-        # turns, but a conversation's best turn can rank below that
-        # globally and still make the collapsed list — collapsing needs
-        # the full scored set (same reasoning as doc_filter in search()).
         with self._compiled(node, model) as (scored, _):
             dm = self.reader.docmap().select("doc_id", "conv_id", "ext_id")
             w = Window.partitionBy("conv_id").orderBy(*_reference_order())
@@ -1188,9 +1158,7 @@ class SearchEngine:
 
         The cursor score must be the engine's own float (bit-identical
         equality is what breaks the tie chain correctly). → same schema
-        as :meth:`search`; ``rank`` restarts at 1 per page. Block-max
-        pruning stays off: page-2 docs are below the corpus-wide top-k
-        by construction.
+        as :meth:`search`; ``rank`` restarts at 1 per page.
 
         ``boost``/``synonyms``/``doc_filter`` MUST match page 1's: the
         cursor is a position in ONE total order, so every page must be
@@ -1323,9 +1291,7 @@ class SearchEngine:
         → DataFrame(doc_id, ext_id, rank, score), reference ordering.
         The query AST is built directly from the selected (already
         analyzed) index terms — never re-parsed, so stemming cannot
-        corrupt them. Block-max pruning runs at topk = k+1: the top-k
-        excluding one doc is always contained in the corpus-wide
-        top-(k+1), so the pruning stays provably exact."""
+        corrupt them."""
         model = model if model is not None else BM25()
         terms = self.mlt_terms(
             doc_id, field, max_terms=max_terms, min_tf=min_tf, min_df=min_df
@@ -1333,7 +1299,7 @@ class SearchEngine:
         if not terms:
             return self._ranked([])
         node = ast.Sum(tuple(ast.Term(t, field) for t in terms))
-        with self._compiled(node, model, topk=k + 1) as (scored, _):
+        with self._compiled(node, model) as (scored, _):
             scored = scored.where(F.col("doc_id") != int(doc_id))
             return self._ranked(_top_k_rows(self._join_docmap(scored), k))
 

@@ -16,9 +16,9 @@ columns:
                 the posting block makes query-time BM25/Indri scoring
                 **join-free** (no 10^12-row doclen join per term).
 * ``poss``    — per posting: varint n_positions, then varint position deltas.
-* ``max_tf``  — block-max metadata: at query time the BM25 block upper bound
-                idf · (max_tf/(max_tf + k1·(1−b))) allows skipping whole
-                blocks below the current top-k threshold (WAND-style).
+* ``max_tf``  — block-max metadata: the largest tf in the block. Part of
+                the segment format; ``IndexReader.term_stats`` reports its
+                per-term maximum.
 
 Encode/decode run inside Arrow-vectorized pandas UDFs; the hot paths here
 are NumPy-vectorized (a whole posting group encodes as a handful of array
@@ -415,9 +415,3 @@ def merge_block_runs(runs: list[list[Block]]) -> list[Block]:
         if flat[i].first_doc <= flat[i - 1].last_doc:
             raise ValueError("merge_block_runs: overlapping doc ranges")
     return flat
-
-
-def bm25_block_upper_bound(max_tf: int, idf: float, k1: float, b: float) -> float:
-    """Upper bound of the BM25 contribution of any posting in the block
-    (doclen→0 limit), used for WAND-style block skipping."""
-    return idf * (max_tf / (max_tf + k1 * (1.0 - b)))

@@ -1,22 +1,21 @@
-"""THE BM25 term-scoring formula — one definition, four consumers.
+"""THE BM25 term-scoring formula — one definition, three consumers.
 
 The reference computes a term's BM25 contribution as
 ``idf · tf/(tf + k1·((1−b) + b·dl/avg_dl))`` with the RSJ idf NOT floored
 at zero (/root/reference/src/QryopSlScore.java:127-163 — a term with
-df > N/2 contributes negatively). Four code paths advertise bit-for-bit
-score parity with each other (plans/compiler.py per-query scoring and its
-block-max seed pass, engine.search_bulk_bm25, letor_batch's f_bm25
-features); hand-duplicating the expression in each risked silent drift —
-any future tweak (flooring idf, reordering operands) must change ALL of
-them or the parity claims and the block-max pruning soundness argument
-break. So the expression lives here, once, in both of its forms:
+df > N/2 contributes negatively). Three code paths advertise bit-for-bit
+score parity with each other (plans/compiler.py per-query scoring,
+engine.search_bulk_bm25, letor_batch's f_bm25 features);
+hand-duplicating the expression in each risked silent drift — any future
+tweak (flooring idf, reordering operands) must change ALL of them or the
+parity claims break. So the expression lives here, once, in both of its forms:
 
 * ``bm25_idf`` — the driver-side Python float (idf is a per-(term, field)
   constant injected into plans as a literal);
 * ``bm25_tf_weight`` — the JVM Column expression, operand order fixed.
 
 Float discipline: every consumer multiplies ``lit(idf) * tf_weight`` in
-that order; the Column's operand order here is exactly the order all four
+that order; the Column's operand order here is exactly the order all the
 sites used, so extracting it changed no bits (locked by the contract's
 hash-matched oracle entries and tests/test_engine_vs_oracle.py).
 """
@@ -46,8 +45,8 @@ def lucene_bm25_idf(n_docs: int, df: int) -> float:
 
 def model_idf(model, n_docs: int, df: int) -> float:
     """The idf the given BM25-family model uses — THE dispatch every
-    scoring site must share (compiler leaf, block-max bounds, driver
-    fast path, explain_doc) so a model change can never drift one site:
+    scoring site must share (compiler leaf, driver fast path,
+    explain_doc) so a model change can never drift one site:
     LuceneBM25 -> lucene_bm25_idf, classic BM25 -> bm25_idf."""
     from ..plans.models import LuceneBM25
 

@@ -13,7 +13,7 @@ cosine), which is exactly the hybrid situation.
 Scale posture: every input ranking is already a top-k cut (k rows per
 query per channel — a few hundred rows total), so fusion is
 arithmetic over k x R rows regardless of corpus size; the expensive
-work stays inside the underlying engines (block-max pruned BM25 scan,
+work stays inside the underlying engines (BM25 postings scan,
 LSH/IVF/PQ ANN). The fold is a chain of full-outer joins with
 contributions added in fixed ranking order — NOT a groupBy-sum — so
 the floating-point result is IEEE-deterministic under any

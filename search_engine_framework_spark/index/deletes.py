@@ -8,9 +8,8 @@ two-phase model, re-expressed for the parquet segment layout:
 * ``delete_docs`` — LOGICAL delete: resolve the victims against the
   docmap and append their doc_ids to a ``tombstones`` parquet dir.
   Queries exclude them immediately (``IndexReader`` anti-joins every
-  posting/doclen/doc_terms/docmap read against the tombstone set —
-  including the block-max seed pass, so a deleted doc can never inflate
-  the top-k pruning threshold). Collection statistics (N, df, ctf) keep
+  posting/doclen/doc_terms/docmap read against the tombstone set).
+  Collection statistics (N, df, ctf) keep
   counting tombstoned docs until a purge — exactly Lucene's behavior,
   where docFreq includes deleted docs until segments merge. Idempotent:
   re-deleting the same docs appends duplicate ids, which the distinct

@@ -25,11 +25,7 @@ query compiler and the SearchEngine search paths consume:
   sub-readers' frames with each sub-index's doc ids shifted by a fixed
   offset (Lucene's docBase) — no shuffle is added: the union is a plan
   concatenation, and every downstream groupBy/join shuffles exactly as
-  it would over one index's frame;
-* block-max prune plans pass through to every sub-reader: the pruning
-  bound ``idf · max_tf/(max_tf + k1(1-b))`` uses the global idf and the
-  block's own max_tf, so a block provably below the threshold in the
-  merged ranking is skipped wherever it lives.
+  it would over one index's frame.
 
 Scale posture: N sub-indexes mean N metadata seeks per query (driver,
 milliseconds each) and one unioned distributed scan — the same shape a
@@ -52,17 +48,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .build import IndexPaths
 from .reader import IndexReader
-
-
-class _SumMetric:
-    """Read-only view summing sub-readers' Spark accumulators."""
-
-    def __init__(self, accs):
-        self._accs = accs
-
-    @property
-    def value(self):
-        return sum(a.value for a in self._accs)
 
 
 class MultiReader:
@@ -160,11 +145,6 @@ class MultiReader:
             h.update(r.state_fingerprint().encode())
         return h.hexdigest()
 
-    @property
-    def decode_counters(self):
-        dec, skip = zip(*(r.decode_counters for r in self.readers))
-        return _SumMetric(dec), _SumMetric(skip)
-
     # -- frames (doc ids shifted by docBase) ----------------------------------
     def _shift(self, df: DataFrame, i: int) -> DataFrame:
         off = self.offsets[i]
@@ -181,17 +161,11 @@ class MultiReader:
         self,
         pairs: set[tuple[str, str]],
         need_positions: bool = True,
-        block_prune: dict | None = None,
     ) -> DataFrame:
         return self._union(
             [
                 self._shift(
-                    r.fetch_postings(
-                        pairs,
-                        need_positions=need_positions,
-                        block_prune=block_prune,
-                    ),
-                    i,
+                    r.fetch_postings(pairs, need_positions=need_positions), i
                 )
                 for i, r in enumerate(self.readers)
             ]

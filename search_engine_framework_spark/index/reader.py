@@ -146,9 +146,7 @@ class IndexReader:
 
     def _mask_deleted(self, df: DataFrame) -> DataFrame:
         """Anti-join out tombstoned docs. Applied to every posting /
-        doclen / doc_terms / docmap read — INCLUDING the block-max seed
-        pass inside fetch_postings, so a deleted doc can never set the
-        top-k pruning threshold (which would unsoundly prune live docs).
+        doclen / doc_terms / docmap read, so a deleted doc never scores.
         The right side is the (small between purges) tombstone set; AQE
         turns this into a broadcast anti-join at runtime."""
         t = self.tombstones()
@@ -527,20 +525,10 @@ class IndexReader:
             cur["max_tf"] = max(cur["max_tf"], mtf)
         return out
 
-    @property
-    def decode_counters(self):
-        """(blocks_decoded, blocks_skipped) Spark accumulators — the
-        bench-visible evidence that block-max pruning is load-bearing."""
-        if not hasattr(self, "_counters"):
-            sc = self.spark.sparkContext
-            self._counters = (sc.accumulator(0), sc.accumulator(0))
-        return self._counters
-
     def fetch_postings(
         self,
         pairs: set[tuple[str, str]],
         need_positions: bool = True,
-        block_prune: dict | None = None,
     ) -> DataFrame:
         """Decoded postings for all (term, field) pairs, one scan.
 
@@ -548,72 +536,8 @@ class IndexReader:
         no #NEAR/#WINDOW/#SYN in the tree) skips the position-blob decode —
         positions are the bulk of the blob bytes, so this roughly halves
         the Python-side decode work on the top-k hot path.
-
-        ``block_prune`` activates block-max decode skipping (WAND-style,
-        plans/compiler.py::QueryCompiler._bm25_block_prune builds it):
-
-        * ``{"mode": "seed", "idf": {(t,f): idf}, "c": k1*(1-b),
-          "seed_n": n}`` — per segment row, decode only the highest-
-          upper-bound blocks until ≥ n postings are covered (pass 1 of
-          exact top-k: establishes the score threshold).
-        * ``{"mode": "min_ub", "idf": ..., "c": ..., "min_ub":
-          {(t,f): v}}`` — decode only blocks whose BM25 upper bound
-          ``idf · max_tf/(max_tf + c)`` reaches v; blocks below it are
-          PROVABLY outside the final top-k (bound argument in the
-          compiler) and are never decoded.
-
-        Block upper bounds come from the ``max_tf`` block metadata the
-        codec stores (functions/codec.py) — reading them costs a few
-        nested-column bytes per block, not a decode.
         """
         seg = self._filter_pairs(pairs).select("term", "field", "blocks")
-        dec_acc, skip_acc = self.decode_counters if block_prune else (None, None)
-
-        def _select_blocks(term, field, blocks):
-            import numpy as np
-
-            if not block_prune:
-                return blocks
-            idf = block_prune["idf"].get((term, field))
-            if idf is None:
-                return blocks
-            c = block_prune["c"]
-            get0 = (
-                (lambda b, k: b.get(k))
-                if len(blocks) and isinstance(blocks[0], dict)
-                else (lambda b, k: getattr(b, k))
-            )
-            mtf = np.array(
-                [get0(b, "max_tf") for b in blocks], dtype=np.float64
-            )
-            if idf >= 0:
-                ub = idf * (mtf / (mtf + c))
-            else:
-                # negative idf (df > N/2): tf/(tf+c) is increasing, so the
-                # LEAST negative contribution is at tf=1 — one constant
-                # bound for every block (max_tf can't discriminate).
-                ub = np.full(len(blocks), idf * (1.0 / (1.0 + c)))
-            if block_prune["mode"] == "seed":
-                ns = np.array([get0(b, "n") for b in blocks], dtype=np.int64)
-                order = np.argsort(-ub, kind="stable")
-                cum = np.cumsum(ns[order])
-                take = int(np.searchsorted(cum, block_prune["seed_n"])) + 1
-                keep_ix = sorted(order[:take].tolist())
-                kept = [blocks[i] for i in keep_ix]
-            else:
-                min_ub = block_prune["min_ub"].get((term, field))
-                if min_ub is None:
-                    return blocks
-                # compare the NON-NEGATIVE part of the bound — a negative
-                # contribution can never help a doc reach the threshold,
-                # and dropping one may only lower its computed score below
-                # θ (soundness argument in compiler._bm25_block_prune)
-                kept = [
-                    b for b, u in zip(blocks, ub) if max(0.0, u) >= min_ub
-                ]
-            dec_acc.add(len(kept))
-            skip_acc.add(len(blocks) - len(kept))
-            return kept
 
         def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             import numpy as np
@@ -632,7 +556,7 @@ class IndexReader:
                 for term, field, blocks in zip(
                     pdf["term"], pdf["field"], pdf["blocks"]
                 ):
-                    for blk in _select_blocks(term, field, blocks):
+                    for blk in blocks:
                         if need_positions:
                             d, t, dl, counts, flat = decode_block_arrays(blk)
                         else:

@@ -182,11 +182,9 @@ class Boost(Node):
     weight: float
 
     def __post_init__(self) -> None:
-        # Block-max pruning's soundness proof (compiler._bm25_block_prune:
-        # division by the child multiplier + sign analysis) assumes every
-        # boost is strictly positive; the parser enforces this for query
-        # strings, but a programmatically built tree must fail loudly here
-        # rather than silently mis-prune.
+        # The parser accepts only strictly positive boosts (as Lucene
+        # rejects negative ones); a programmatically built tree is held to
+        # the same contract and fails loudly here.
         if not self.weight > 0:
             raise ValueError(
                 f"Boost weight must be > 0, got {self.weight!r}"

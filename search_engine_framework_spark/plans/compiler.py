@@ -38,18 +38,6 @@ from . import ast
 from .models import BM25, Indri, RankedBoolean, RetrievalModel, UnrankedBoolean
 
 
-# Block-max pruning engages only past this many (estimated) posting blocks
-# across the query's terms — the two-pass plan costs an extra driver
-# round-trip (the seed-decode job; term stats themselves are a driver-side
-# pyarrow read when the index is driver-reachable, reader.term_stats), so
-# it must be able to skip enough decode work to pay for it. 4096 blocks ≈
-# 0.5M postings per query; below that, decode is cheaper than the
-# scheduling. Callers can override per query
-# (``SearchEngine.search(prune_min_blocks=...)``) — the bench forces a low
-# threshold to demonstrate the skip counters at test scale.
-_PRUNE_MIN_BLOCKS = 4096
-
-
 @dataclass
 class ILResult:
     df: DataFrame  # (doc_id, tf, positions, doclen)
@@ -88,45 +76,19 @@ class QueryCompiler:
         self._stats: dict = {}
 
     # ------------------------------------------------------------------ setup
-    def prepare(
-        self,
-        node: ast.Node,
-        topk: int | None = None,
-        prune_min_blocks: int | None = None,
-    ) -> None:
+    def prepare(self, node: ast.Node) -> None:
         """Materialize per-pair stats and the decoded-postings cache.
 
         df/ctf/max_tf come from SEGMENT METADATA (a projected scan of a few
-        small columns, bucket- and row-group-pruned — no block decode), so
-        they are correct even when the decode itself is pruned.
-
-        ``topk``: when the model is BM25 and the tree is a flat
-        ``#SUM(term ...)``, enables block-max pruning — only blocks whose
-        score upper bound can reach the running top-``topk`` threshold are
-        ever decoded (see ``_bm25_block_prune``).
+        small columns, bucket- and row-group-pruned — no block decode).
         """
         pairs = ast.query_terms(node)
         self._stats = {
             pair: {"df": s["df"], "ctf": s["ctf"], "max_tf": s["max_tf"]}
             for pair, s in self.reader.term_stats(pairs).items()
         }
-        need_pos = ast.needs_positions(node)
-        prune = None
-        if (
-            topk
-            and isinstance(self.model, BM25)
-            and not need_pos
-            and self._flat_sum_pairs(node) is not None
-        ):
-            prune = self._bm25_block_prune(
-                node, topk,
-                min_blocks=(
-                    prune_min_blocks if prune_min_blocks is not None
-                    else _PRUNE_MIN_BLOCKS
-                ),
-            )
         self._postings = self.reader.fetch_postings(
-            pairs, need_positions=need_pos, block_prune=prune
+            pairs, need_positions=ast.needs_positions(node)
         ).persist()
 
     @staticmethod
@@ -139,8 +101,7 @@ class QueryCompiler:
         wrapper around an explicit #SUM query) are transparent:
         #SUM(#SUM(a b)) scores identically to #SUM(a b) (user_w = 1,
         0.0 + s == s in IEEE754). Since round 3 boosted children
-        qualify too — the fast path and block-max pruning both carry
-        the per-child multiplier."""
+        qualify too — the fast path carries the per-child multiplier."""
         while (
             isinstance(node, ast.Sum)
             and len(node.children) == 1
@@ -166,112 +127,6 @@ class QueryCompiler:
         callers needing the boosts use the weighted form)."""
         w = QueryCompiler._flat_sum_weighted(node)
         return None if w is None else [(t, f) for t, f, _ in w]
-
-    def _bm25_block_prune(
-        self, node: ast.Node, k: int, min_blocks: int | None = None
-    ) -> dict | None:
-        """Exact-top-k block-max pruning plan for a flat BM25 #SUM.
-
-        Soundness (negative idf included — a term with df > N/2 contributes
-        NEGATIVE scores, QryopSlScore.java:139 idf not floored):
-
-        * θ: seed-decode each term's best blocks, take the k-th largest
-          partial score p_k, and set θ = p_k + Σ_t w_t·min(0, gmin_t)
-          (gmin = the term's most negative possible contribution). Each of
-          those k docs' true totals ≥ its partial + the negative slack, so
-          ≥ k docs have total ≥ θ ⇒ the true k-th total T_k ≥ θ.
-        * skip block b of term t iff
-            w_t·max(0, ub(b)) + Σ_{t'≠t} w_t'·max(0, gmax_t') < θ.
-          For any doc d touching a skipped block: its TRUE total and its
-          COMPUTED score (which misses at most negative contributions)
-          are both ≤ that bound < θ ≤ T_k. Meanwhile every doc with
-          total ≥ θ is fully decoded (else the same bound caps its total
-          below θ) and there are ≥ k of them — so the top-k by computed
-          scores are exactly the true top-k with exact scores.
-
-        w_t = Σ of the pair's children's boosts (duplicate plain children
-        count 1.0 each; QryOpSlSum user weights are 1 for k₃-default,
-        caret boosts multiply — parser guarantees boosts > 0, so every
-        w_t > 0 and the sign analysis above is unchanged). gmax/gmin come
-        from segment-level max_tf METADATA — no decode. An absolute 1e-6
-        margin guards float comparisons.
-
-        Returns None (no pruning) when the index is too small to benefit
-        (< ``_PRUNE_MIN_BLOCKS`` blocks across the query's terms) or when a
-        seed threshold can't be established.
-        """
-        m = self.model
-        n_docs = self.reader.num_docs
-        c = m.k_1 * (1.0 - m.b)
-        weighted = self._flat_sum_weighted(node)
-        mult: dict[tuple[str, str], float] = {}
-        for t, f, b in weighted:
-            mult[(t, f)] = mult.get((t, f), 0.0) + b
-        pairs = set(mult)
-
-        idf: dict[tuple[str, str], float] = {}
-        gmax: dict[tuple[str, str], float] = {}
-        gmin: dict[tuple[str, str], float] = {}
-        est_blocks = 0
-        for p in pairs:
-            st = self._stats.get(p, {"df": 0, "ctf": 0, "max_tf": 0})
-            df = int(st["df"])
-            if df <= 0:
-                continue
-            i = model_idf(self.model, n_docs, df)
-            idf[p] = i
-            mtf = max(1, int(st["max_tf"] or 1))
-            # contribution i·tf/(tf + k1((1−b) + b·dl/avg)) over tf ∈
-            # [1, max_tf], dl ∈ (0, ∞): extremes at dl→0 with tf=max_tf
-            # (i>0: max; i<0: min) and at tf→... the other end at tf=1.
-            lo, hi = i * (1.0 / (1.0 + c)), i * (mtf / (mtf + c))
-            gmax[p], gmin[p] = (hi, lo) if i >= 0 else (lo, hi)
-            est_blocks += (df + 127) // 128
-        threshold = _PRUNE_MIN_BLOCKS if min_blocks is None else min_blocks
-        if not idf or est_blocks < threshold:
-            return None
-
-        # pass 1: seed decode → θ = k-th best partial score
-        seed = self.reader.fetch_postings(
-            pairs,
-            need_positions=False,
-            block_prune={"mode": "seed", "idf": idf, "c": c, "seed_n": 4 * k},
-        )
-        score = None
-        for p, i in idf.items():
-            avg_dl = self.reader.avg_doclen(p[1])
-            if not avg_dl:
-                continue
-            # seed partials feed only the θ threshold (1e-6 margin below
-            # absorbs any ulp-level association difference vs the final
-            # scoring path, which multiplies lit(idf) * tf_weight too)
-            s = F.lit(mult[p]) * F.lit(i) * bm25_tf_weight(m.k_1, m.b, avg_dl)
-            cond = (F.col("term") == p[0]) & (F.col("field") == p[1])
-            score = F.when(cond, s) if score is None else score.when(cond, s)
-        if score is None:
-            return None
-        partial = (
-            seed.select("doc_id", score.otherwise(F.lit(0.0)).alias("s"))
-            .groupBy("doc_id")
-            .agg(F.sum("s").alias("partial"))
-            .orderBy(F.desc("partial"))
-            .limit(k)
-            .collect()
-        )
-        if len(partial) < k:
-            return None  # fewer than k candidate docs — decode everything
-        neg_slack = sum(mult[p] * min(0.0, gmin[p]) for p in idf)
-        theta = min(r["partial"] for r in partial) + neg_slack - 1e-6
-
-        pos = {p: mult[p] * max(0.0, gmax[p]) for p in idf}
-        pos_sum = sum(pos.values())
-        # reader compares mult-free: max(0, ub(b)) ≥ min_ub[p]
-        min_ub = {
-            p: (theta - (pos_sum - pos[p])) / mult[p] for p in idf
-        }
-        if all(v <= 0.0 for v in min_ub.values()):
-            return None  # threshold can't exclude any block — skip pass 2 cost
-        return {"mode": "min_ub", "idf": idf, "c": c, "min_ub": min_ub}
 
     def release(self) -> None:
         if self._postings is not None:

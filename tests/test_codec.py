@@ -4,7 +4,6 @@ import random
 
 from search_engine_framework_spark.functions.codec import (
     Block,
-    bm25_block_upper_bound,
     decode_block,
     encode_blocks,
     merge_block_runs,
@@ -44,8 +43,6 @@ def test_encode_decode_roundtrip():
 def test_block_max_metadata():
     blocks = encode_blocks([1, 2, 3], [5, 9, 2], [10, 10, 10], [[0] * 5, [0] * 9, [0] * 2])
     assert blocks[0].max_tf == 9
-    ub = bm25_block_upper_bound(9, idf=2.0, k1=1.2, b=0.75)
-    assert ub == 2.0 * 9 / (9 + 1.2 * 0.25)
 
 
 def test_merge_block_runs_ordered_concat():

@@ -112,24 +112,6 @@ def test_multi_docid_offsets_disjoint(split_indexes):
     assert len(exts) == len(set(exts))
 
 
-def test_multi_block_prune_passthrough(split_indexes):
-    """Forcing block-max pruning through the federated path keeps the
-    exact top-k (bound uses global idf + per-block max_tf)."""
-    multi, combined = split_indexes
-    pruned = _by_ext(multi, "search engine data", BM25(), k=10)
-    # prune_min_blocks=0 forces pruning on even tiny postings
-    forced = [
-        (r["ext_id"], r["rank"], r["score"])
-        for r in multi.search(
-            "search engine data", BM25(), k=10, prune_min_blocks=0
-        ).collect()
-    ]
-    assert forced == pruned
-    assert [f[:2] for f in forced] == [
-        w[:2] for w in _by_ext(combined, "search engine data", BM25(), k=10)
-    ]
-
-
 def test_multi_analyzer_mismatch_raises(spark, tmp_path_factory, split_indexes):
     root = tmp_path_factory.mktemp("mismatch")
     corpus = synth_transcripts(spark, n_convs=4, seed=3)

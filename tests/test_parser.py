@@ -171,7 +171,7 @@ def test_boost_one_placement_still_validated():
 
 def test_boost_ast_rejects_nonpositive_weight():
     """Programmatically built Boost nodes fail loudly on weight <= 0 —
-    block-max pruning's soundness proof assumes every boost > 0 and the
+    the same contract the parser enforces for query strings, and the
     parser is not the only constructor (round-4 ADVICE fix)."""
     import pytest as _pytest
 

@@ -6,8 +6,7 @@ Properties locked here:
   list (arbitrary gaps, tfs, position sets, block sizes), and the two
   decoders (list-wise and vectorized-array) agree.
 * block-max metadata: each block's max_tf/n equal the true values of the
-  postings it holds — the soundness premise of BM25 block pruning
-  (index/reader.py fetch_postings block_prune).
+  postings it holds (segment-format metadata that term_stats reports).
 * NEAR/WINDOW kernels: every emitted match is witnessed by a valid
   position tuple (ordered adjacent gaps ≤ n for NEAR; span < width for
   WINDOW), and a single-argument op echoes its input list — invariants

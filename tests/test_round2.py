@@ -1,5 +1,5 @@
-"""Round-2 features: bucket pruning, block-max pruning, Krovetz stemmer,
-svm_rank model reader, field validation, crash-safe incremental appends."""
+"""Round-2 features: bucket pruning, Krovetz stemmer, svm_rank model
+reader, field validation, crash-safe incremental appends."""
 
 import json
 import os
@@ -99,75 +99,6 @@ def test_bucket_pruning_in_plan(spark, tiny_index):
     assert sorted(map(tuple, pruned.collect())) == sorted(
         map(tuple, unpruned.collect())
     )
-
-
-# ---------------------------------------------------------------------------
-# block-max pruning: exact top-k with skipped decodes
-# ---------------------------------------------------------------------------
-
-def _skewed_corpus(spark, n_light=400, n_heavy=10):
-    """Docs 0..n_heavy-1: short, tf('zzz')=5 (high BM25). The rest: long
-    with a single 'zzz' (their blocks have max_tf=1 → skippable)."""
-    filler = " ".join(f"w{i}" for i in range(49))
-    rows = []
-    for i in range(n_heavy):
-        rows.append((f"conv-{i:08d}", 0, "user", "zzz zzz zzz zzz zzz", "", None))
-    for i in range(n_heavy, n_heavy + n_light):
-        rows.append((f"conv-{i:08d}", 0, "user", filler + " zzz", "", None))
-    return spark.createDataFrame(
-        rows,
-        "conv_id string, turn_idx int, role string, text string, "
-        "tool string, ts timestamp",
-    )
-
-
-def test_blockmax_prune_exact_topk(spark, tmp_path):
-    from search_engine_framework_spark.engine import SearchEngine
-    from search_engine_framework_spark.index.build import build_index
-    from search_engine_framework_spark.plans.models import BM25
-
-    out = str(tmp_path / "ix")
-    # small blocks so the light docs span many max_tf=1 blocks
-    build_index(spark, _skewed_corpus(spark), out, fields=("body",),
-                n_buckets=8, n_salts=4, block_size=8)
-    eng = SearchEngine(spark, out)
-
-    # prune_min_blocks through the public API also sidesteps the
-    # driver-side fast path, so the DISTRIBUTED pruning plan is what runs
-    # (fastpath answers flat #SUM without decoding any blocks at all).
-    q = "#SUM(zzz w1)"
-    dec0, skip0 = eng.decode_metrics().values()
-    pruned = [tuple(r) for r in eng.search(q, BM25(), k=5, prune_min_blocks=1).collect()]
-    dec1, skip1 = eng.decode_metrics().values()
-    assert skip1 > skip0, "no blocks were skipped — pruning not engaged"
-
-    # force-disable pruning via a fresh engine and a huge threshold
-    eng2 = SearchEngine(spark, out)
-    full = [tuple(r) for r in eng2.search(q, BM25(), k=5, prune_min_blocks=10**9).collect()]
-    assert pruned == full
-    assert len(full) == 5
-
-
-def test_blockmax_prune_noop_on_unskewed(spark, tmp_path):
-    """On a corpus where no block can be excluded the planner returns
-    None (or skips nothing) and results are identical either way."""
-    from search_engine_framework_spark.engine import SearchEngine
-    from search_engine_framework_spark.index.build import build_index
-    from search_engine_framework_spark.plans.models import BM25
-    from search_engine_framework_spark.sources.transcripts import synth_transcripts
-
-    out = str(tmp_path / "ix")
-    tdf = synth_transcripts(spark, n_convs=60, seed=11)
-    build_index(spark, tdf, out, fields=("body",), n_buckets=8, n_salts=4,
-                block_size=8)
-    eng = SearchEngine(spark, out)
-    q = "#SUM(search engine data)"  # negative-idf heads: unprunable
-    pruned = [tuple(r)
-              for r in eng.search(q, BM25(), k=10, prune_min_blocks=1).collect()]
-    eng2 = SearchEngine(spark, out)
-    full = [tuple(r)
-            for r in eng2.search(q, BM25(), k=10, prune_min_blocks=10**9).collect()]
-    assert pruned == full
 
 
 # ---------------------------------------------------------------------------
@@ -789,8 +720,9 @@ _TAIL_CASES = {
         lambda e, m, q: e.search(q, m.BM25(), k=10),
         _RANKED_SCHEMA, lambda r: (-r["score"], r["ext_id"]),
     ),
+    # the test sets SEFS_DRIVER_TOPK=0, so the fast path declines
     "search_distributed": (
-        lambda e, m, q: e.search(q, m.BM25(), k=10, prune_min_blocks=10**9),
+        lambda e, m, q: e.search(q, m.BM25(), k=10),
         _RANKED_SCHEMA, lambda r: (-r["score"], r["ext_id"]),
     ),
     "search_distributed_unranked": (
@@ -877,6 +809,8 @@ def test_ranked_entry_points_share_one_tail(
         fastpath, "bm25_topk_driver",
         lambda *a, **kw: answered.append(driver(*a, **kw)) or answered[-1],
     )
+    if name == "search_distributed":
+        monkeypatch.setenv("SEFS_DRIVER_TOPK", "0")
     paths, _rows, _tdf = tiny_index
     eng = SearchEngine(spark, paths)
     call, schema, key = _TAIL_CASES[name]
@@ -884,7 +818,7 @@ def test_ranked_entry_points_share_one_tail(
     if name == "search_fastpath":
         assert answered and answered[-1] is not None
     if name == "search_distributed":
-        assert not answered
+        assert answered == [None]
     assert df.schema.simpleString() == schema
     rows = df.collect()
     assert rows
@@ -904,6 +838,18 @@ def test_ranked_entry_points_share_one_tail(
     empty = call(eng, models, _STOP)
     assert empty.schema.simpleString() == schema
     assert empty.count() == 0
+
+
+def test_decode_metrics_keeps_the_benchmark_keys(spark, tiny_index):
+    """The benchmark reads exactly these two counters from every search
+    run and subtracts them; no query path skips blocks, so both stay 0."""
+    from search_engine_framework_spark.engine import SearchEngine
+    from search_engine_framework_spark.plans.models import BM25
+
+    paths, _rows, _tdf = tiny_index
+    eng = SearchEngine(spark, paths)
+    eng.search("search engine", BM25(), k=5).collect()
+    assert eng.decode_metrics() == {"blocks_decoded": 0, "blocks_skipped": 0}
 
 
 def test_ranked_tail_frame_round_trips_exactly(spark):
@@ -1057,31 +1003,6 @@ def test_search_many_lucene_and_boosts(spark, tiny_index):
             for r in eng.search(text, LuceneBM25(), k=10).collect()
         )
         assert got == want, qid
-
-
-def test_blockmax_prune_exact_topk_boosted(spark, tmp_path):
-    """Round 3: boosted flat #SUM queries engage block-max pruning with
-    boost-weighted bounds — results must equal the unpruned plan exactly
-    while blocks are actually skipped."""
-    from search_engine_framework_spark.engine import SearchEngine
-    from search_engine_framework_spark.index.build import build_index
-    from search_engine_framework_spark.plans.models import BM25
-
-    out = str(tmp_path / "ix")
-    build_index(spark, _skewed_corpus(spark), out, fields=("body",),
-                n_buckets=8, n_salts=4, block_size=8)
-    eng = SearchEngine(spark, out)
-    q = "#SUM(zzz^3 w1^0.5)"
-    dec0, skip0 = eng.decode_metrics().values()
-    pruned = [tuple(r) for r in
-              eng.search(q, BM25(), k=5, prune_min_blocks=1).collect()]
-    dec1, skip1 = eng.decode_metrics().values()
-    assert skip1 > skip0, "no blocks skipped — boosted pruning not engaged"
-    eng2 = SearchEngine(spark, out)
-    full = [tuple(r) for r in
-            eng2.search(q, BM25(), k=5, prune_min_blocks=10**9).collect()]
-    assert pruned == full
-    assert len(full) == 5
 
 
 def test_search_bulk_lucene_idf_and_caret_rejection(spark, tiny_index):

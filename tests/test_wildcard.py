@@ -159,12 +159,9 @@ def test_doc_filter_unknown_column_raises(engine):
         engine.search_df("search", BM25(), doc_filter="nosuchcol = 1").collect()
 
 
-def test_doc_filter_correct_even_with_forced_pruning(engine):
-    """Block-max pruning keeps only the corpus-wide top-k; with a
-    doc_filter it must be disabled or filtered results lose docs ranked
-    below the global cut. prune_min_blocks=0 forces pruning wherever it
-    is legal — the filtered result must still equal the post-hoc filter
-    of the full scored list."""
+def test_doc_filter_topk_equals_post_hoc_filter_of_full_list(engine):
+    """The filtered top-k keeps docs ranked below the corpus-wide cut:
+    it equals the post-hoc filter of the full scored list."""
     full = {
         r["ext_id"]: r["score"]
         for r in engine.search_df("search engine", BM25()).collect()
@@ -175,7 +172,6 @@ def test_doc_filter_correct_even_with_forced_pruning(engine):
     )[:5]
     got = engine.search(
         "search engine", BM25(), k=5,
-        prune_min_blocks=0,
         doc_filter="conv_id <= 'conv-00000020'",
     ).collect()
     assert [(r["score"], r["ext_id"]) for r in got] == want
